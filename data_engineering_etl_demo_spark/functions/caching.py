@@ -9,11 +9,17 @@ one live cached instance per (slot, session): rebuilding the plan
 unpersists the previous instance before persisting the new one.  The
 blocks themselves are evicted lazily (blocking=False), so the unpersist is
 metadata-cheap.
+
+:func:`materialized` is the call-scoped counterpart: a relation that
+several actions of ONE call reuse is computed once and released when the
+call's ``with`` block exits, errors included.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -158,3 +164,22 @@ def persist_latest(df: DataFrame, slot: str, storage_level=None) -> DataFrame:
         )
         _live[key] = df
     return df
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` computed once, for the duration of the ``with`` block.
+
+    ``localCheckpoint(eager=True)`` runs ``df`` in one job and cuts its
+    lineage, so every later action over the returned relation reads the
+    stored rows instead of re-running the plan.  The checkpoint keeps
+    ``df``'s partitions and the row order inside each, so position-derived
+    columns computed over it (``monotonically_increasing_id``) order rows
+    exactly as over ``df``.  The blocks are released on exit, on error
+    too; ``DataFrame.unpersist`` only touches the CacheManager, so the
+    release goes to the RDD under the checkpoint's ``LogicalRDD``."""
+    ck = df.localCheckpoint(eager=True)
+    try:
+        yield ck
+    finally:
+        ck._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -87,7 +87,10 @@ def fused_predicates(
     (all counts collapse map-side to one partial row per task), then the
     counts unpivot into the standard |rules|-row report shape.  The
     report rows are identical to evaluating each rule separately — only
-    the number of table scans changes (k rules: k scans → 1)."""
+    the number of table scans changes (k rules: k scans → 1).  An empty
+    ``rules`` list raises ``ValueError``: there is no report to build."""
+    if not rules:
+        raise ValueError(f"fused_predicates({table!r}): rules is empty")
     counts = df.agg(
         *[
             F.count_if(bad).alias(f"_n{i}")

@@ -215,11 +215,14 @@ def lsh_candidate_pairs(
     two operations keyed the same way share one exchange).  The pair
     SET is identical: a bucket of members {x₁<…<x_w} yields exactly the
     pairs the equi-join with id_a < id_b produced (sortedness makes
-    position order ⟺ id order).  Per-ROW memory is O(W) — the member
-    array plus one suffix slice — never the flattened W² pairs array an
-    earlier form allocated inside a single task row before exploding (the
-    guide-§5 spill hazard a boilerplate mega-bucket would hit at 100 TB);
-    the Generate operators stream the quadratic output row by row.
+    position order ⟺ id order).  Per-ROW memory is O(W), never the
+    flattened W² pairs array an earlier form allocated inside a single
+    task row before exploding (the guide-§5 spill hazard a boilerplate
+    mega-bucket would hit at 100 TB): between the two explodes each of a
+    bucket's W intermediate rows carries the WHOLE ``_ids`` array (W
+    copies of a W-array per bucket), and the second explode emits rows
+    of two ids.  The Generate operators stream the quadratic output row
+    by row.
 
     ``max_bucket_width`` is the mega-bucket guard for boilerplate-heavy
     corpora: a bucket shared by W docs contributes W·(W−1)/2 candidate

@@ -12,14 +12,14 @@ Semantics preserved exactly (pinned by the ported unit tests):
   8. left join users dim (broadcast)                (J1)
 metrics: dedup_removed, null_user_id, invalid_event_type, rows_out.
 
-Scale notes: the good/bad split is two filters over one scan (Catalyst
-reuses the subplan); dedup windows by event_id — maximal-cardinality key, so
-the shuffle is even; the users dim is broadcast (J1 is fact⟕dim).  Metrics
-ride on the pipeline's own writes via ``df.observe()`` (CollectMetrics
-nodes on the input and output of the transform): the EP1 fact write both
-loads the warehouse AND populates every counter, zero extra jobs.  Only a
-caller that asks for metrics before ever running an action triggers one
-fallback noop action.
+Scale notes: the good/bad split is two filters over the same input (EP1
+hands in its materialized ingest rows, so neither re-reads the raw file);
+dedup windows by event_id — maximal-cardinality key, so the shuffle is
+even; the users dim is broadcast (J1 is fact⟕dim).  Metrics ride on the
+pipeline's own actions via ``df.observe()`` (CollectMetrics nodes on the
+input and output of the transform): EP1's one materialization of ``clean``
+populates every counter, zero extra jobs.  Only a caller that asks for
+metrics before ever running an action triggers one fallback noop action.
 """
 
 from __future__ import annotations
@@ -86,7 +86,7 @@ class TransformResult:
     @property
     def metrics(self) -> dict:
         """Counters (A8).  Free when any action has already run on ``clean``
-        (the normal pipeline path: the warehouse write populates both
+        (the normal pipeline path: materializing clean populates both
         CollectMetrics nodes); falls back to explicit aggregation when the
         observation machinery fails (e.g. idempotent pipeline re-runs)."""
         if self._metrics is None:
@@ -185,7 +185,7 @@ def transform(events: DataFrame, users: DataFrame) -> TransformResult:
     )
 
     # A8 metrics on the output: rides on whatever action consumes clean
-    # (the EP1 warehouse write in the pipeline) — no dedicated jobs.
+    # (EP1's materialization of it) — no dedicated jobs.
     obs_out = Observation()
     clean = clean.observe(
         obs_out,

@@ -60,18 +60,42 @@ def _schema_with_ts(spark_ts: T.DataType) -> T.StructType:
     )
 
 
+def _link_events(link, sf_dir: str) -> None:
+    """Point the staging symlink ``link`` at ``sf_dir``'s events.parquet.
+    Staging dirs are keyed by the input dir's NAME, so a link left by an
+    earlier input dir of the same name — removed since (dangling) or
+    living elsewhere — is replaced, never trusted.  The swap is a rename,
+    so a concurrent reader sees the old link or the new one."""
+    import os
+    import uuid
+
+    target = f"{sf_dir}/events.parquet"
+    if os.path.islink(link) and os.readlink(link) == target:
+        return
+    tmp = f"{link}.{uuid.uuid4().hex}.tmp"
+    os.symlink(target, tmp)
+    os.replace(tmp, link)
+
+
+def _drain_name(prefix: str, sf_dir: str) -> str:
+    """Deterministic per-input memory-sink name: ``prefix`` plus the input
+    dir's name with every character that is not valid in an identifier
+    mapped to ``_`` (the sink registers a temp view of this name)."""
+    import re
+    from pathlib import Path
+
+    return f"{prefix}_{re.sub(r'[^0-9A-Za-z_]', '_', Path(sf_dir).name)}"
+
+
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.  The file source needs a
     directory, so the single events.parquet is exposed via a symlink in a
     per-sf staging dir (no data copy)."""
-    import os
     from pathlib import Path
 
     stage = Path("/tmp/spark_graft_stream") / Path(sf_dir).name
     stage.mkdir(parents=True, exist_ok=True)
-    link = stage / "events.parquet"
-    if not link.exists():
-        os.symlink(f"{sf_dir}/events.parquet", link)
+    _link_events(stage / "events.parquet", sf_dir)
 
     schema, mode = _events_read_schema(sf_dir)
     if mode == "nanos_long":
@@ -484,15 +508,12 @@ def _doubled_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     symlinks the same events.parquet under two names, so the source reads
     two files and each event_id arrives as a genuine duplicate — the
     at-least-once delivery a dedup stage exists to absorb."""
-    import os
     from pathlib import Path
 
     stage = Path("/tmp/spark_graft_stream_dup") / Path(sf_dir).name
     stage.mkdir(parents=True, exist_ok=True)
     for name in ("events_a.parquet", "events_b.parquet"):
-        link = stage / name
-        if not link.exists():
-            os.symlink(f"{sf_dir}/events.parquet", link)
+        _link_events(stage / name, sf_dir)
 
     schema, mode = _events_read_schema(sf_dir)
     if mode == "nanos_long":
@@ -577,8 +598,6 @@ from data_engineering_etl_demo_spark.plans.timeseries import SQL_VALUE_EMA
     memoize=False,
 )
 def q_streaming_value_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pathlib import Path
-
     def build(s: SparkSession) -> DataFrame:
         ev = (
             _event_stream(s, sf_dir)
@@ -598,7 +617,7 @@ def q_streaming_value_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the no-data batch is a no-op, elided.
     out = P.run_to_completion(
         build,
-        query_name=f"ema_{Path(sf_dir).name.replace('.', '_')}",
+        query_name=_drain_name("ema", sf_dir),
         shuffle_partitions=16,
         spark=spark,
         no_data_batch=False,
@@ -740,8 +759,6 @@ def _ooo_staged_dir(spark: SparkSession, sf_dir: str) -> str:
     memoize=False,
 )
 def q_streaming_value_ema_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pathlib import Path
-
     stage = _ooo_staged_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -768,7 +785,7 @@ def q_streaming_value_ema_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = P.run_to_completion(
         build,
-        query_name=f"ema_ooo_{Path(sf_dir).name.replace('.', '_')}",
+        query_name=_drain_name("ema_ooo", sf_dir),
         shuffle_partitions=16,
         spark=spark,
     )
@@ -818,8 +835,6 @@ _KMV_SRC = (
     memoize=False,
 )
 def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pathlib import Path
-
     stage = _ooo_staged_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -839,7 +854,7 @@ def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-data batch is a no-op, elided.
     out = P.run_to_completion(
         build,
-        query_name=f"kmv_{Path(sf_dir).name.replace('.', '_')}",
+        query_name=_drain_name("kmv", sf_dir),
         shuffle_partitions=4,
         spark=spark,
         no_data_batch=False,
@@ -893,8 +908,6 @@ def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoize=False,
 )
 def q_streaming_topk_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pathlib import Path
-
     stage = _ooo_staged_dir(spark, sf_dir)
 
     def build(s: SparkSession) -> DataFrame:
@@ -916,7 +929,7 @@ def q_streaming_topk_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no-op, elided.
     out = P.run_to_completion(
         build,
-        query_name=f"topk_{Path(sf_dir).name.replace('.', '_')}",
+        query_name=_drain_name("topk", sf_dir),
         shuffle_partitions=4,
         spark=spark,
         no_data_batch=False,

@@ -7,24 +7,32 @@ is a text scan + from_json with a corrupt-record column and a three-way
 filter split — declarative, no row-at-a-time Python.
 
 `_line` provenance (reference enumerate(f, start=1), ingest.py:41): true
-per-file 1-based line numbers, computed distributed — a tiny per-input-split
-count pre-pass gives each (file, split) its starting offset, then a window
-keyed by (file, split) adds the local index.  The shuffle is keyed by input
-split (even by construction, never one-reducer-per-file), and the offset
-table is #splits rows.  Numbering includes blank lines (the reference
-counts them before skipping), and bad records keep the raw line (`_raw`)
-for decode errors exactly as the reference does.
+per-file 1-based line numbers, computed distributed and without a shuffle
+of the lines — a tiny per-input-split pre-pass gives each (file, split) its
+line count and first row id, and every line's number is its row id shifted
+by its split's offset.  The offset table is #splits rows.  Numbering
+includes blank lines (the reference counts them before skipping), and bad
+records keep the raw line (`_raw`) for decode errors exactly as the
+reference does.
+
+The tagged relation (every parsed line with its `_reason`) feeds the good
+rows, the bad rows and both ingest counts.  `read_events_jsonl` computes
+it once and releases it when the caller's scope closes, so a pipeline that
+runs several actions over it scans its input twice (numbering pre-pass,
+materialization), not once per action.
 """
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from data_engineering_etl_demo_spark.functions.caching import materialized
 from data_engineering_etl_demo_spark.functions.cleaning import strict_utc_ts
+from data_engineering_etl_demo_spark.functions.local_rows import local_df
 from data_engineering_etl_demo_spark.schemas import RAW_EVENT
 
 REQUIRED_EVENT_FIELDS = ("event_id", "ts", "event")  # pipeline/ingest.py:12
@@ -34,41 +42,58 @@ REQUIRED_EVENT_FIELDS = ("event_id", "ts", "event")  # pipeline/ingest.py:12
 class IngestResult:
     events: DataFrame  # good rows, ts parsed to TimestampType
     bad_records: DataFrame  # quarantined rows tagged with _reason + _line
+    tagged: DataFrame  # every non-blank line, _reason null on good rows
+
+    def counts(self) -> tuple[int, int]:
+        """(good, bad) row counts, one aggregate over the tagged lines."""
+        bad = F.col("_reason").isNotNull()
+        r = self.tagged.agg(
+            F.count_if(~bad).alias("good"), F.count_if(bad).alias("bad")
+        ).first()
+        return r["good"], r["bad"]
 
 
 def _numbered_lines(spark: SparkSession, path: str) -> DataFrame:
     """(value, _file, _line): every text line with its per-file 1-based
-    line number.  Within one scan partition lines stream in file order,
-    and a file's splits are planned offset-ascending (equal-size splits
-    keep their relative order through Spark's stable size sort, and the
-    odd-size tail is the file's last chunk), so (split-offset + local
-    row_number) reproduces the sequential reader's numbering — the same
-    foundation RDD.zipWithIndex stands on, but per file and without
-    leaving the DataFrame API."""
+    line number.  Within one scan partition a file's lines stream in file
+    order with consecutive row ids (``monotonically_increasing_id`` counts
+    every row of the partition), and a file's splits are planned
+    offset-ascending (equal-size splits keep their relative order through
+    Spark's stable size sort, and the odd-size tail is the file's last
+    chunk).  So a line's number is its row id minus the first row id of
+    its (file, split), plus the lines of the file's earlier splits — the
+    sequential reader's numbering from one projection over the scan, with
+    no window and no shuffle of the lines."""
     txt = spark.read.text(path).select(
         "value",
         F.col("_metadata.file_path").alias("_file"),
         F.spark_partition_id().alias("_pid"),
         F.monotonically_increasing_id().alias("_mid"),
     )
-    # pre-pass: rows per (file, split).  #splits rows — driver-safe.
-    counts = txt.groupBy("_file", "_pid").count().collect()
+    # pre-pass: rows and first row id per (file, split).  #splits rows —
+    # driver-safe.
+    splits = (
+        txt.groupBy("_file", "_pid")
+        .agg(F.count(F.lit(1)).alias("n"), F.min("_mid").alias("first"))
+        .collect()
+    )
     offsets, running = [], {}
-    for r in sorted(counts, key=lambda r: (r["_file"], r["_pid"])):
-        offsets.append((r["_file"], r["_pid"], running.get(r["_file"], 0)))
-        running[r["_file"]] = running.get(r["_file"], 0) + r["count"]
-    from data_engineering_etl_demo_spark.functions.local_rows import local_df
+    for r in sorted(splits, key=lambda r: (r["_file"], r["_pid"])):
+        before = running.get(r["_file"], 0)
+        offsets.append((r["_file"], r["_pid"], before + 1 - r["first"]))
+        running[r["_file"]] = before + r["n"]
 
     off = local_df(spark, offsets, "_file string, _pid int, _off long")
-    w = Window.partitionBy("_file", "_pid").orderBy("_mid")
     return (
         txt.join(F.broadcast(off), on=["_file", "_pid"])
-        .withColumn("_line", (F.row_number().over(w) + F.col("_off")))
+        .withColumn("_line", F.col("_mid") + F.col("_off"))
         .select("value", "_file", "_line")
     )
 
 
-def read_events_jsonl(spark: SparkSession, path: str) -> IngestResult:
+def read_events_jsonl(
+    spark: SparkSession, path: str, scope: ExitStack
+) -> IngestResult:
     """S1: JSONL event source with validation + quarantine.
 
     Split rules (matching /root/reference/pipeline/ingest.py:41-66):
@@ -77,6 +102,11 @@ def read_events_jsonl(spark: SparkSession, path: str) -> IngestResult:
       3. ts present but unparseable   → _reason 'invalid_timestamp'
     Blank lines are counted for `_line` then dropped (reference ingest.py:
     42-44); bad records carry the true source line number.
+
+    The tagged lines are materialized once (one scan of the input after
+    the numbering pre-pass) and released when ``scope`` closes; every
+    relation of the result reads the stored rows, so use it inside
+    ``scope`` only.
     """
     numbered = _numbered_lines(spark, path).filter(
         F.trim(F.col("value")) != ""
@@ -88,7 +118,7 @@ def read_events_jsonl(spark: SparkSession, path: str) -> IngestResult:
             RAW_EVENT,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ),
-    ).select("_line", F.col("value").alias("_value"), "_p.*")
+    ).select("_line", "_p.*")
     parsed_ts = strict_utc_ts(F.col("ts"))
 
     corrupt = F.col("_corrupt_record").isNotNull()
@@ -108,7 +138,7 @@ def read_events_jsonl(spark: SparkSession, path: str) -> IngestResult:
         .when(bad_ts, F.lit("invalid_timestamp"))
     )
 
-    tagged = raw.withColumn("_reason", reason)
+    tagged = scope.enter_context(materialized(raw.withColumn("_reason", reason)))
     bad = tagged.filter(F.col("_reason").isNotNull()).select(
         "event_id",
         "ts",
@@ -121,9 +151,9 @@ def read_events_jsonl(spark: SparkSession, path: str) -> IngestResult:
     good = (
         tagged.filter(F.col("_reason").isNull())
         .withColumn("ts", parsed_ts)
-        .drop("_reason", "_corrupt_record", "_line", "_value")
+        .drop("_reason", "_corrupt_record", "_line")
     )
-    return IngestResult(events=good, bad_records=bad)
+    return IngestResult(events=good, bad_records=bad, tagged=tagged)
 
 
 def read_users_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import ExitStack
 
 import pytest
 
@@ -13,3 +14,11 @@ def spark():
     spark = get_spark(app_name="tests", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def scope():
+    """An ExitStack closed when the test ends: a relation a test
+    materializes through it is released at teardown."""
+    with ExitStack() as stack:
+        yield stack

@@ -1,6 +1,7 @@
 """Constraint operator semantics on a planted dirty fixture — each rule
 kind must count exactly the violations planted, no more."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_etl_demo_spark.operators import constraints as C
@@ -59,3 +60,9 @@ def test_clean_table_reports_all_zero(spark):
         ]
     ).collect()
     assert all(r["n_violations"] == 0 for r in rows)
+
+
+def test_fused_predicates_rejects_an_empty_rule_list(spark):
+    t = spark.createDataFrame([(1,)], "id long")
+    with pytest.raises(ValueError, match="rules is empty"):
+        C.fused_predicates(t, "t", [])

@@ -130,7 +130,7 @@ def test_loader_specs_registered():
         assert name in specs and specs[name].oracle is not None
 
 
-def test_run_loader_end_to_end(spark, tmp_path):
+def test_run_loader_end_to_end(spark, tmp_path, scope):
     """EP3 driver: canonical JSONL sinks + per-file stats report, and the
     canonical events feed EP1's ingest (loader output is pipeline input)."""
     import json
@@ -151,7 +151,7 @@ def test_run_loader_end_to_end(spark, tmp_path):
     # canonical events round-trip through the EP1 ingest contract
     from data_engineering_etl_demo_spark.sources.ingest import read_events_jsonl
 
-    ingest = read_events_jsonl(spark, report["outputs"]["events"])
+    ingest = read_events_jsonl(spark, report["outputs"]["events"], scope)
     assert ingest.events.count() == 12
     assert ingest.bad_records.count() == 0
 

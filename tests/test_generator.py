@@ -30,13 +30,13 @@ def _binomial_tol(p: float, n: int) -> float:
     return 5 * math.sqrt(p * (1 - p) / n)
 
 
-def test_generated_rates_observed_through_real_ingest(spark, tmp_path):
+def test_generated_rates_observed_through_real_ingest(spark, tmp_path, scope):
     out = tmp_path / "gen_events"
     generate_dirty_events(
         spark, N, invalid_pct=10, null_user_pct=5, n_bad_ts=N_BAD_TS
     ).coalesce(1).write.mode("overwrite").text(str(out))
 
-    res = read_events_jsonl(spark, str(out))
+    res = read_events_jsonl(spark, str(out), scope)
     bad = res.bad_records.collect()
     # every BAD_TIME row lands in the ingest quarantine with the exact
     # reference reason, and nothing else does

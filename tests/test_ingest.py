@@ -29,8 +29,8 @@ def events_path(tmp_path):
     return str(p)
 
 
-def test_three_way_quarantine_split(spark, events_path):
-    res = read_events_jsonl(spark, events_path)
+def test_three_way_quarantine_split(spark, events_path, scope):
+    res = read_events_jsonl(spark, events_path, scope)
     good = res.events.collect()
     assert [r["event_id"] for r in good] == ["e1"]
     assert good[0]["ts"].isoformat().startswith("2026-01-01T00:00:01")
@@ -50,13 +50,13 @@ def test_three_way_quarantine_split(spark, events_path):
     assert bad[None]["_raw"] == MALFORMED
 
 
-def test_line_numbers_survive_multi_split_reads(spark, tmp_path):
+def test_line_numbers_survive_multi_split_reads(spark, tmp_path, scope):
     """Per-file numbering must hold when one read spans several files (and
     therefore several input splits): each file restarts at 1."""
     a, b = tmp_path / "a.jsonl", tmp_path / "b.jsonl"
     a.write_text(json.dumps(GOOD) + "\n" + MALFORMED + "\n")
     b.write_text(MALFORMED + "\n")
-    res = read_events_jsonl(spark, str(tmp_path / "*.jsonl"))
+    res = read_events_jsonl(spark, str(tmp_path / "*.jsonl"), scope)
     from data_engineering_etl_demo_spark.sources.ingest import _numbered_lines
 
     nums = {
@@ -68,8 +68,79 @@ def test_line_numbers_survive_multi_split_reads(spark, tmp_path):
     assert bad_lines == [1, 2]  # a.jsonl line 2 and b.jsonl line 1
 
 
-def test_bad_records_sink_roundtrip(spark, events_path, tmp_path):
-    res = read_events_jsonl(spark, events_path)
+@pytest.fixture
+def many_splits(spark):
+    """Read every file as many small input splits (~8 KB each)."""
+    confs = {"spark.sql.files.maxPartitionBytes": "8192",
+             "spark.sql.files.openCostInBytes": "0"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def _split_file(tmp_path, lines):
+    p = tmp_path / "split.jsonl"
+    p.write_text("\n".join(lines) + "\n")
+    return str(p)
+
+
+def test_line_numbers_hold_across_many_splits_of_one_file(
+    spark, tmp_path, many_splits, scope
+):
+    """One file read as dozens of splits: every line keeps its 1-based
+    file line number, blank and malformed lines included."""
+    from data_engineering_etl_demo_spark.sources.ingest import _numbered_lines
+
+    lines = []
+    for n in range(1, 2001):
+        if n % 97 == 0:
+            lines.append("")
+        elif n % 89 == 0:
+            lines.append(f"broken line {n} {{")
+        else:
+            lines.append(json.dumps({**GOOD, "event_id": f"e{n}", "page": "x" * 40}))
+    path = _split_file(tmp_path, lines)
+    assert spark.read.text(path).rdd.getNumPartitions() >= 10
+
+    got = {r["_line"]: r["value"] for r in _numbered_lines(spark, path).collect()}
+    assert got == {n: text for n, text in enumerate(lines, 1)}
+
+    bad = read_events_jsonl(spark, path, scope).bad_records.collect()
+    assert sorted(r["_line"] for r in bad) == [n for n in range(1, 2001) if n % 89 == 0 and n % 97]
+    assert all(r["_raw"] == f"broken line {r['_line']} {{" for r in bad)
+
+
+def test_dedup_keeps_file_last_equal_ts_duplicate_across_splits(
+    spark, tmp_path, many_splits, scope
+):
+    """Equal-ts duplicates of one event_id placed in different splits:
+    dedup keeps the one latest in the file."""
+    from data_engineering_etl_demo_spark.operators.transform import transform
+
+    # event_id -> lines holding an equal-ts copy; user_id = the copy's line
+    copies = {"d1": (5, 900, 1990), "d2": (1500, 30), "d3": (700, 701, 1400)}
+    at = {n: eid for eid, ns in copies.items() for n in ns}
+    lines = [
+        json.dumps({**GOOD, "event_id": at.get(n, f"e{n}"), "user_id": str(n),
+                    "page": "x" * 40})
+        for n in range(1, 2001)
+    ]
+    path = _split_file(tmp_path, lines)
+    assert spark.read.text(path).rdd.getNumPartitions() >= 10
+    users = spark.createDataFrame([], "user_id string, country string")
+    clean = transform(read_events_jsonl(spark, path, scope).events, users).clean
+    kept = {
+        r["event_id"]: r["user_id"]
+        for r in clean.filter(clean.event_id.isin(*copies)).collect()
+    }
+    assert kept == {eid: str(max(ns)) for eid, ns in copies.items()}
+
+
+def test_bad_records_sink_roundtrip(spark, events_path, tmp_path, scope):
+    res = read_events_jsonl(spark, events_path, scope)
     out = str(tmp_path / "bad")
     write_bad_records(res.bad_records, out)
     back = spark.read.json(out)

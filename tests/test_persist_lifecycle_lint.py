@@ -29,6 +29,13 @@ memo-bounded-intermediate
                     ``prune_dead_memo`` drops the key when its session
                     stops.  A persist in an UN-memoized code path must
                     NOT use this category.
+call-scoped         the release of a relation materialized and released
+                    within one call: the site sits in the ``finally`` of
+                    a ``@contextmanager`` generator that materializes the
+                    relation before its ``try`` and yields it inside, so
+                    the caller's ``with`` block bounds the handle's
+                    lifetime, errors included.  Pinned structurally by
+                    ``test_call_scoped_sites_release_in_finally``.
 
 Keys are (package-relative path, stripped line) with pinned occurrence
 counts and stale-entry failure, matching the BIGINT, materialization,
@@ -40,6 +47,7 @@ before the dot) so prose mentions of ``.persist()`` in docstrings do not
 enter the ledger.
 """
 
+import ast
 import os
 import re
 from collections import Counter
@@ -60,6 +68,7 @@ _PAT = re.compile(r"(?:[\w\)\]]\s*|^\s*)\.\s*(persist|cache|unpersist)\s*\(")
 _CATEGORIES = {
     "memo-managed",
     "memo-bounded-intermediate",
+    "call-scoped",
 }
 
 _ALLOWLIST = {
@@ -72,6 +81,11 @@ _ALLOWLIST = {
         ("memo-managed", 1),
     ("functions/caching.py", "else df.persist()"):
         ("memo-managed", 1),
+    # materialized(): releases the localCheckpoint it yielded (EP1's
+    # tagged ingest lines and clean rows, one run_pipeline call each).
+    ("functions/caching.py",
+     "ck._jdf.queryExecution().logical().rdd().unpersist(False)"):
+        ("call-scoped", 1),
     # docs_boilerplate_ngrams: exploded shingle relation feeds dfreq,
     # the flag join, and per-doc totals (3 consumers).
     ("plans/scale_patterns.py",
@@ -179,3 +193,77 @@ def test_audited_categories_still_present():
         f"category set drifted: missing {_CATEGORIES - present}, "
         f"unknown {present - _CATEGORIES}"
     )
+
+
+def _scoped_release_lines(src: str) -> set[int]:
+    """Line numbers of the ``finally`` bodies of every ``@contextmanager``
+    generator that materializes a relation (``localCheckpoint`` /
+    ``persist``) and yields inside the ``try`` that finally closes."""
+    lines = set()
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        decos = {getattr(d, "id", getattr(d, "attr", None)) for d in fn.decorator_list}
+        materializes = any(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "attr", None) in ("localCheckpoint", "persist")
+            for n in ast.walk(fn)
+        )
+        if "contextmanager" not in decos or not materializes:
+            continue
+        for t in ast.walk(fn):
+            if not isinstance(t, ast.Try) or not t.finalbody:
+                continue
+            if not any(isinstance(n, ast.Yield) for b in t.body for n in ast.walk(b)):
+                continue
+            for stmt in t.finalbody:
+                lines.update(range(stmt.lineno, stmt.end_lineno + 1))
+    return lines
+
+
+def test_call_scoped_sites_release_in_finally():
+    """Every call-scoped site is a release the caller's ``with`` block
+    cannot skip: it sits in the ``finally`` of a materializing
+    ``@contextmanager`` generator."""
+    for (rel, line), (cat, _n) in _ALLOWLIST.items():
+        if cat != "call-scoped":
+            continue
+        with open(os.path.join(_PKG_DIR, rel)) as f:
+            src = f.read()
+        hits = [
+            i for i, text in enumerate(src.splitlines(), 1) if text.strip() == line
+        ]
+        outside = [i for i in hits if i not in _scoped_release_lines(src)]
+        assert hits and not outside, (
+            f"{rel}:{outside or line}: call-scoped release outside the "
+            "finally of a materializing @contextmanager — an error between "
+            "materialize and release would leak the blocks"
+        )
+
+
+def test_call_scoped_check_rejects_a_release_outside_finally():
+    """Canary: the structural check fails a release that an error skips,
+    and one in a function that never yields the relation."""
+    leaky = (
+        "from contextlib import contextmanager\n"
+        "@contextmanager\n"
+        "def held(df):\n"
+        "    ck = df.localCheckpoint(eager=True)\n"
+        "    yield ck\n"
+        "    ck.rdd.unpersist(False)\n"
+    )
+    assert 6 not in _scoped_release_lines(leaky)
+    plain = (
+        "def held(df):\n"
+        "    ck = df.localCheckpoint(eager=True)\n"
+        "    try:\n"
+        "        return ck.count()\n"
+        "    finally:\n"
+        "        ck.rdd.unpersist(False)\n"
+    )
+    assert 6 not in _scoped_release_lines(plain)
+    scoped = leaky.replace(
+        "    yield ck\n    ck.rdd",
+        "    try:\n        yield ck\n    finally:\n        ck.rdd",
+    )
+    assert 8 in _scoped_release_lines(scoped)

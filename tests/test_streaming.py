@@ -712,3 +712,94 @@ def test_full_outer_join_click_expiry_boundary(spark, tmp_path):
         key=repr,
     )
     assert got == sorted([(1, 2), (10, None), (None, 20)], key=repr)
+
+
+def _tiny_events(sf_dir, n: int) -> None:
+    """An events.parquet of ``n`` rows in ``sf_dir``: 3 users, one event a
+    minute."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf_dir.mkdir(parents=True)
+    t0 = datetime(2026, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(1, n + 1), pa.int64()),
+                "ts": pa.array([t0 + timedelta(minutes=i) for i in range(n)], pa.timestamp("us")),
+                "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
+                "event_type": pa.array(["view"] * n),
+                "value": pa.array([float(i) for i in range(n)]),
+                "props": pa.array(["{}"] * n),
+            }
+        ),
+        str(sf_dir / "events.parquet"),
+    )
+
+
+def _drop_stream_staging(name: str) -> None:
+    import glob
+    import shutil
+
+    for path in glob.glob(f"/tmp/spark_graft_stream*/{glob.escape(name)}*"):
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def test_stream_staging_follows_an_input_dir_recreated_under_the_same_name(
+    spark, tmp_path
+):
+    """Staging links are keyed by the input dir's name: after that dir is
+    removed and a new one of the same name appears elsewhere, both staged
+    sources read the new dir's rows (the old link dangles)."""
+    import shutil
+    import uuid
+
+    from data_engineering_etl_demo_spark.plans.streaming_plans import (
+        _doubled_event_stream,
+        _event_stream,
+    )
+
+    name = f"restaged_{uuid.uuid4().hex[:8]}"
+
+    def drained(sf_dir, tag):
+        single = _event_stream(spark, str(sf_dir)).groupBy().count()
+        doubled = _doubled_event_stream(spark, str(sf_dir)).groupBy().count()
+        return (
+            P.run_to_completion(single, f"{name}_{tag}_1", "complete").collect()[0][0],
+            P.run_to_completion(doubled, f"{name}_{tag}_2", "complete").collect()[0][0],
+        )
+
+    try:
+        first = tmp_path / "a" / name
+        _tiny_events(first, 5)
+        assert drained(first, "a") == (5, 10)
+        shutil.rmtree(first)
+        second = tmp_path / "b" / name
+        _tiny_events(second, 7)
+        assert drained(second, "b") == (7, 14)
+    finally:
+        _drop_stream_staging(name)
+
+
+def test_drain_over_an_input_dir_with_a_dash_in_its_name(spark, tmp_path):
+    """A drain names its memory sink after the input dir; a name that is
+    not an identifier (here a ``-``) must give the same rows as a plain
+    one."""
+    import shutil
+    import uuid
+
+    from data_engineering_etl_demo_spark.plans import all_specs
+
+    fn = all_specs()["streaming_value_ema"].spark_fn
+    tag = uuid.uuid4().hex[:8]
+    plain, dashed = tmp_path / f"plain_{tag}", tmp_path / f"with-dash_{tag}"
+    try:
+        _tiny_events(plain, 12)
+        dashed.mkdir()
+        shutil.copy(plain / "events.parquet", dashed / "events.parquet")
+        want = sorted(map(tuple, fn(spark, str(plain)).collect()))
+        assert want
+        assert sorted(map(tuple, fn(spark, str(dashed)).collect())) == want
+    finally:
+        _drop_stream_staging(plain.name)
+        _drop_stream_staging(dashed.name)

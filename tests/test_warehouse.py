@@ -106,14 +106,9 @@ def test_intl_fact_contract_and_null_fk_drop(spark, tmp_path):
     assert fact[0]["customer_id"] == cust["acme"]
 
 
-def test_ep1_ep2_end_to_end(spark, tmp_path):
-    """Full pipeline on dirty JSONL, then the 5 analytics queries over the
-    warehouse must agree with direct computation on the clean output."""
-    import os
-
-    from data_engineering_etl_demo_spark.etl import run_pipeline
-    from data_engineering_etl_demo_spark.plans.warehouse_analytics import run_all
-
+def _ep1_inputs(tmp_path):
+    """Dirty events JSONL and users CSV: bogus event types, a same-id
+    duplicate, a non-JSON line and a line missing ts."""
     events = tmp_path / "events.jsonl"
     lines = []
     for i in range(20):
@@ -131,7 +126,18 @@ def test_ep1_ep2_end_to_end(spark, tmp_path):
 
     users = tmp_path / "users.csv"
     users.write_text("user_id,country,signup_source\n" + "\n".join(f"{i},C{i},src" for i in range(5)) + "\n")
+    return events, users
 
+
+def test_ep1_ep2_end_to_end(spark, tmp_path):
+    """Full pipeline on dirty JSONL, then the 5 analytics queries over the
+    warehouse must agree with direct computation on the clean output."""
+    import os
+
+    from data_engineering_etl_demo_spark.etl import run_pipeline
+    from data_engineering_etl_demo_spark.plans.warehouse_analytics import run_all
+
+    events, users = _ep1_inputs(tmp_path)
     res = run_pipeline(
         spark,
         str(events),
@@ -167,6 +173,69 @@ def test_ep1_ep2_end_to_end(spark, tmp_path):
     assert os.path.exists(queries["funnel"].csv_path)
     funnel = queries["funnel"].df.collect()
     assert funnel and all(r["signup_to_purchase_rate"] is not None for r in funnel)
+
+
+def _stored_rdds(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _text_scans(spark, path) -> int:
+    """Text scans of ``path`` in the SQL executions the status store keeps
+    (the CSV reader scans the users file as text too, for its header)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n, execs = 0, store.executionsList().iterator()
+    while execs.hasNext():
+        nodes = store.planGraph(execs.next().executionId()).allNodes().iterator()
+        while nodes.hasNext():
+            node = nodes.next()
+            n += node.name().startswith("Scan text") and str(path) in node.desc()
+    return n
+
+
+def test_ep1_reads_raw_events_at_most_twice_and_releases_storage(spark, tmp_path):
+    """EP1 materializes its ingest lines and clean rows once: the raw
+    events file is scanned by the line-numbering pre-pass and the ingest
+    materialization only, however many sinks, MERGE steps and counters
+    follow, and nothing the run stored outlives the call."""
+    from data_engineering_etl_demo_spark.etl import run_pipeline
+
+    events, users = _ep1_inputs(tmp_path)
+    before = _stored_rdds(spark)
+    # untruncated scan locations in the plan graph, so the events file's
+    # scans can be told from the users file's
+    key = "spark.sql.maxMetadataStringLength"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        res = run_pipeline(spark, str(events), str(users),
+                           warehouse_dir=str(tmp_path / "wh"),
+                           output_dir=str(tmp_path / "out"))
+    finally:
+        spark.conf.set(key, saved)
+    assert res.report.loaded_rows > 0
+    assert 1 <= _text_scans(spark, events) <= 2
+    assert _stored_rdds(spark) - before == set()
+
+
+def test_ep1_releases_storage_when_a_sink_fails(spark, tmp_path, monkeypatch):
+    from data_engineering_etl_demo_spark import etl
+
+    held = []
+
+    def failing_export(df, path):
+        held.append(_stored_rdds(spark) - before)
+        raise RuntimeError("export sink down")
+
+    monkeypatch.setattr(etl, "write_csv_export", failing_export)
+    events, users = _ep1_inputs(tmp_path)
+    before = _stored_rdds(spark)
+    with pytest.raises(RuntimeError, match="export sink down"):
+        etl.run_pipeline(spark, str(events), str(users),
+                         warehouse_dir=str(tmp_path / "wh"),
+                         output_dir=str(tmp_path / "out"))
+    assert len(held[0]) == 2  # ingest lines + clean rows, live mid-run
+    assert _stored_rdds(spark) - before == set()
 
 
 # ---------------------------------------------------------------------------
