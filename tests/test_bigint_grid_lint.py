@@ -1,294 +1,47 @@
-"""BIGINT-wrap lint (VERDICT r9 item 2): the r9 audit (PLANS.md
-"Integer ppm grids") classified every integer-widening multiplication in
-the plans package — a CORPUS-LEVEL sum times 1e6 wraps BIGINT silently
-in non-ANSI Spark once the sum passes ~9.2e12 (2^63/1e6), diverging from
-the oracle exactly at the 100 TB scales the docstrings advertise.  This
-test makes that audit STRUCTURAL: it greps the package for `* 1000000` /
-`* 1000000000` integer forms and asserts every site is either
-
-- on the DECIMAL(38,0) grid ON THE SAME LINE (auto-classified), or
-- in the explicit allowlist below, keyed to the PLANS.md categories:
-
-  decimal-grid     on the DECIMAL(38,0) grid, split across source lines
-                   so the same-line auto-check can't see the cast
-  per-row-bounded  numerator is a per-row / per-doc term (money v6
-                   fixed-point, per-doc array sizes, per-doc surprisal
-                   sums) — bounded far below 2^63/1e6 by row semantics
-  count-headroom   numerator bounded by a count with >=90x headroom
-                   (#users, #docs, K*Q recall samples)
-  oracle-only      DuckDB oracle SQL: BIGINT math that RAISES on
-                   overflow (never wraps) and only ever runs at oracle
-                   test SF — the Spark side of the same query is on the
-                   DECIMAL grid
-  driver-python    driver-side Python int arithmetic over bounded
-                   collects (arbitrary precision by language)
-  constant         compile-time constant literals (us windows, epsilon)
-
-A NEW `* 1000000` on an unbounded cohort sum fails this test until the
-contributor either moves it to the DECIMAL(38,0) grid or classifies it
-here AND in the PLANS.md table — so the next wrap is caught in CI, not
-at 9.2e12 tokens.  Float forms (`* 1e6`, `* 1000000.0`) are exempt by
-the regex: a DOUBLE multiply promotes and cannot wrap.
-
-Allowlist keys are (file basename, stripped source line): stable across
-line-number drift, and a content edit forces re-classification.  Stale
-entries (matching no current site) also fail, so the list cannot rot.
-"""
-
-import os
-import re
-from collections import Counter
+"""BIGINT-wrap lint: every integer-literal widening multiplication in the
+package (a ``* 1000000`` that wraps BIGINT once its operand passes
+2^63/1e6) is on the DECIMAL(38,0) grid on the same line or classified.
+Ledger: ``BIGINT`` in ``ledger_lints.py``; categories: PLANS.md
+"Integer ppm grids"."""
 
 import pytest
 
-_PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "data_engineering_etl_demo_spark",
-    "plans",
-)
-
-# integer-literal widening multiply; (?![\w.]) / (?<![\w.]) exempt float
-# literals (1000000.0) and identifiers
-_PAT = re.compile(
-    r"(\*\s*1_?000_?000(?:_?000)?(?![\w.]))"
-    r"|((?<![\w.])1_?000_?000(?:_?000)?\s*\*)"
-)
-
-_CATEGORIES = {
-    "decimal-grid",
-    "per-row-bounded",
-    "count-headroom",
-    "oracle-only",
-    "driver-python",
-    "constant",
-}
-
-_ALLOWLIST = {
-    ('analytics.py',
-     'f"ROUND(SUM(CAST(ROUND(({expr}) * 1000000) AS BIGINT)) / 1000000.0, {scale})"'): 'per-row-bounded',
-    ('llmdata.py',
-     '" * 1000000"'): 'decimal-grid',
-    ('llmdata.py',
-     '" 0L, (a, x) -> a + x) * 1000000)"'): 'per-row-bounded',
-    ('llmdata.py',
-     '"(size(array_distinct(w)) * 1000000)"'): 'per-row-bounded',
-    ('llmdata.py',
-     '(len(list_distinct(w)) * 1000000)'): 'per-row-bounded',
-    ('llmdata.py',
-     '(len(list_filter(w, x -> x IN ({_STOPS}))) * 1000000)'): 'per-row-bounded',
-    ('llmdata.py',
-     '(w_e6 * 1000000 // w_total) * 1000000'): 'oracle-only',
-    ('llmdata.py',
-     '* 1000000) // greatest(len(w), 1) AS wlen_e6,'): 'per-row-bounded',
-    ('llmdata.py',
-     '.otherwise(F.expr("(n_hit * 1000000) DIV n_truth"))'): 'count-headroom',
-    ('llmdata.py',
-     '// GREATEST(n_tokens * 1000000 // tok_total, 1)'): 'oracle-only',
-    ('llmdata.py',
-     'CAST((CAST(SUM(length(bin(c1 // c2))) AS BIGINT) * 1000000)'): 'per-row-bounded',
-    ('llmdata.py',
-     'CAST((CAST(SUM(length(bin(total // cnt))) AS BIGINT) * 1000000)'): 'per-row-bounded',
-    ('llmdata.py',
-     'CAST((SUM({_fmt(SQL_BPE)}) * 1000000)'): 'oracle-only',
-    ('llmdata.py',
-     'CAST(COUNT(*) * 1000000 // {_RECALL_K * _N_IVF_Q} AS BIGINT)'): 'count-headroom',
-    ('llmdata.py',
-     'CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE)) * 1000000)'): 'oracle-only',
-    ('llmdata.py',
-     'ELSE ((SELECT count(*) FROM hit) * 1000000)'): 'count-headroom',
-    ('llmdata.py',
-     'F.expr("(sum_bits * 1000000) DIV n_bigrams").alias("mean_bits_e6"),'): 'per-row-bounded',
-    ('llmdata.py',
-     'F.expr("(sum_bits * 1000000) DIV n_tokens").alias("mean_bits_e6"),'): 'per-row-bounded',
-    ('llmdata.py',
-     'F.expr(f"n_hits * 1000000 DIV {_RECALL_K * _N_IVF_Q}")'): 'count-headroom',
-    ('llmdata.py',
-     'f"(size(filter(w, x -> x IN ({stops}))) * 1000000)"'): 'per-row-bounded',
-    ('llmdata.py',
-     'n_tokens * 1000000 // tok_total AS natural_ppm,'): 'oracle-only',
-    ('llmdata.py',
-     'w_e6 * 1000000 // w_total AS weight_ppm,'): 'oracle-only',
-    ('multimodal.py',
-     '>= F.expr("(tot * 1000000) DIV nb")'): 'per-row-bounded',
-    ('multimodal.py',
-     'AND (ps * 1000000) // pn >= (tot * 1000000) // nb'): 'per-row-bounded',
-    ('multimodal.py',
-     'F.expr("(ps * 1000000) DIV pn")'): 'per-row-bounded',
-    ('scale_patterns.py',
-     '* 1_000_000'): 'per-row-bounded',
-    ('scale_patterns.py',
-     'CAST(ROUND(value * 1000000) AS BIGINT) AS v6'): 'per-row-bounded',
-    ('scale_patterns.py',
-     'CAST({int(_DP_EPS * 1_000_000)} AS BIGINT) AS epsilon_e6'): 'constant',
-    ('scale_patterns.py',
-     'F.lit(int(_DP_EPS * 1_000_000)).cast("long").alias("epsilon_e6"),'): 'constant',
-    ('scale_patterns.py',
-     'F.round(F.col("value") * 1_000_000).cast("long").alias("v6"),'): 'per-row-bounded',
-    ('streaming_plans.py',
-     'CAST(ROUND(value * 1000000) AS BIGINT) AS v6'): 'per-row-bounded',
-    ('streaming_plans.py',
-     'CAST(ROUND(value * 1000000) AS BIGINT) AS v6,'): 'per-row-bounded',
-    ('streaming_plans.py',
-     'F.round(F.col("value") * 1_000_000).cast("long").alias("v6"),'): 'per-row-bounded',
-    ('streaming_plans.py',
-     'ORDER BY CAST(ROUND(value * 1000000) AS BIGINT) DESC,'): 'per-row-bounded',
-    ('streaming_plans.py',
-     'ROUND(CAST(SUM(CAST(ROUND(COALESCE(e.value, 0) * 1000000)'): 'per-row-bounded',
-    ('streaming_plans.py',
-     '_OOO_SHIFT_US = 3 * 3600 * 1_000_000  # disorder window (< the 6-h watermark)'): 'constant',
-    ('timeseries.py',
-     '"(2 * ra_dot * 1000000)"'): 'decimal-grid',
-    ('timeseries.py',
-     '(CAST(sum(converted) AS BIGINT) * 1000000)'): 'count-headroom',
-    ('timeseries.py',
-     '(n * 1000000) // CAST(SUM(n) OVER (PARTITION BY variant, src)'): 'count-headroom',
-    ('timeseries.py',
-     '(src, d): (n * 1_000_000) // tot[src]'): 'driver-python',
-    ('timeseries.py',
-     ').withColumn("rate_e6", F.expr("(n_converted * 1000000) DIV n_users"))'): 'count-headroom',
-    ('timeseries.py',
-     '* 1000000) // (t.n * t.s)'): 'oracle-only',
-    ('timeseries.py',
-     '- ((t.n + 1) * 1000000) // t.n, 0) AS gini_ppm'): 'oracle-only',
-    ('timeseries.py',
-     'AS BIGINT) * 1000000) // t.s AS top10pct_share_ppm,'): 'oracle-only',
-    ('timeseries.py',
-     'AS BIGINT) * 1000000) // t.s AS top1pct_share_ppm,'): 'oracle-only',
-    ('timeseries.py',
-     'CAST(ROUND(COALESCE(value, 0) * 1000000) AS BIGINT) AS v_f'): 'per-row-bounded',
-    ('timeseries.py',
-     'CAST(SUM(CAST(ROUND(COALESCE(value, 0) * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('timeseries.py',
-     'CAST(SUM(CAST(ROUND(COALESCE(value, 0) * 1000000) AS BIGINT)) OVER w'): 'per-row-bounded',
-    ('timeseries.py',
-     'CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('timeseries.py',
-     'F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 1_000_000)'): 'per-row-bounded',
-    ('timeseries.py',
-     'F.round(F.col("value") * 1_000_000).cast("long").alias("v"),'): 'per-row-bounded',
-    ('timeseries.py',
-     'THEN tr.p_e6 * 1000000000'): 'oracle-only',
-    ('timeseries.py',
-     '_MK_GAP_US = 30 * 60 * 1_000_000  # session gap, µs'): 'constant',
-    ('timeseries.py',
-     '_ROLL_WINDOW_US = 3_600 * 1_000_000  # 1 hour'): 'constant',
-    ('timeseries.py',
-     '_SESSION_GAP_US = 6 * 3600 * 1_000_000  # 6 hours'): 'constant',
-    ('timeseries.py',
-     'acc += pe6 * 1_000_000_000'): 'driver-python',
-    ('timeseries.py',
-     'list(CAST(ROUND(value * 1000000) AS BIGINT)'): 'per-row-bounded',
-    ('tpch.py',
-     '> (SELECT SUM(CAST(ROUND(i.c_acctbal * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('tpch.py',
-     '> (SELECT SUM(CAST(ROUND(i.o_totalprice * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('tpch.py',
-     'CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 1000000) AS BIGINT) AS rev_fixed'): 'per-row-bounded',
-    ('tpch.py',
-     'CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 1000000) AS BIGINT) AS vol_fixed'): 'per-row-bounded',
-    ('tpch.py',
-     'CAST(ROUND(o_totalprice * 1000000) AS BIGINT) AS price_fixed'): 'per-row-bounded',
-    ('tpch.py',
-     'CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000)'): 'per-row-bounded',
-    ('tpch.py',
-     'CAST(SUM(CAST(ROUND(l_quantity * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('tpch.py',
-     'CAST(SUM(CAST(ROUND(o.o_totalprice * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('tpch.py',
-     'F.round(F.col("o_totalprice") * 1_000_000)'): 'per-row-bounded',
-    ('tpch.py',
-     'ROUND(SUM(CAST(ROUND(l_quantity * 1000000) AS BIGINT)) / (COUNT(*) * 1000000.0), 4) AS avg_qty,'): 'per-row-bounded',
-    ('tpch.py',
-     'SELECT ROUND(SUM(CAST(ROUND(l.l_extendedprice * 1000000) AS BIGINT))'): 'per-row-bounded',
-    ('tpch.py',
-     'SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000)'): 'per-row-bounded',
-    ('tpch.py',
-     'WHERE 2 * CAST(ROUND(l.l_quantity * 1000000) AS BIGINT) * pa.cnt'): 'per-row-bounded',
-    ('tpch.py',
-     'WHERE CAST(ROUND(c.c_acctbal * 1000000) AS BIGINT)'): 'per-row-bounded',
-    ('tpch.py',
-     'WHERE CAST(ROUND(o_totalprice * 1000000) AS BIGINT) * ('): 'per-row-bounded',
-}
-
-
-def _scan():
-    found = Counter()
-    for fname in sorted(os.listdir(_PLANS_DIR)):
-        if not fname.endswith(".py"):
-            continue
-        with open(os.path.join(_PLANS_DIR, fname)) as f:
-            for line in f:
-                if not _PAT.search(line):
-                    continue
-                if "DECIMAL(38,0)" in line or "decimal(38,0)" in line:
-                    continue  # on the grid, visibly, on this line
-                found[(fname, line.strip())] += 1
-    return found
+from ledger_lints import BIGINT, check, scan
 
 
 def test_allowlist_categories_are_from_the_plansmd_vocabulary():
-    bad = {k: v for k, v in _ALLOWLIST.items() if v not in _CATEGORIES}
-    assert not bad, f"unknown classification(s): {bad}"
+    check(BIGINT, "malformed")
 
 
 def test_every_integer_widening_multiply_is_classified():
-    found = _scan()
-    new = [k for k in found if k not in _ALLOWLIST]
-    assert not new, (
-        "unclassified integer-widening multiplication(s) in the plans "
-        "package — if the multiplicand sums an UNBOUNDED cohort (corpus/"
-        "language/source/day) move it to the DECIMAL(38,0) grid; "
-        "otherwise classify it in the PLANS.md 'Integer ppm grids' table "
-        f"AND this allowlist: {new}"
-    )
+    check(BIGINT, "unclassified")
 
 
 def test_allowlist_has_no_stale_entries():
-    found = _scan()
-    stale = [k for k in _ALLOWLIST if k not in found]
-    assert not stale, (
-        "allowlist entries matching no current source line (site removed "
-        f"or edited — re-classify the new form): {stale}"
-    )
-
-
-# Expected occurrence count per allowlist key — 1 unless listed here.
-# Closes the ADVICE r10 gap: keys are (file, stripped line), so a NEW
-# widening multiply whose stripped text equals an existing entry (e.g.
-# another `* 1000000` in the same file matching a generic key) would
-# otherwise ride the old classification silently.  Any added or removed
-# occurrence of an allowlisted line now fails until re-adjudicated.
-_EXPECTED_MULTI = {
-    ("streaming_plans.py",
-     'F.round(F.col("value") * 1_000_000).cast("long").alias("v6"),'): 3,
-    ("timeseries.py",
-     "CAST(ROUND(COALESCE(value, 0) * 1000000) AS BIGINT) AS v_f"): 3,
-    ("timeseries.py",
-     'F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 1_000_000)'): 3,
-    ("tpch.py",
-     "CAST(SUM(CAST(ROUND(l_quantity * 1000000) AS BIGINT))"): 2,
-}
+    check(BIGINT, "stale")
 
 
 def test_allowlist_occurrence_counts_match():
-    found = _scan()
-    drift = {
-        k: (_EXPECTED_MULTI.get(k, 1), found.get(k, 0))
-        for k in _ALLOWLIST
-        if found.get(k, 0) != _EXPECTED_MULTI.get(k, 1)
-    }
-    assert not drift, (
-        "BIGINT-grid occurrence drift (key: expected, found) — a new "
-        "occurrence of an allowlisted line must be re-adjudicated, not "
-        f"inherit the old classification: {drift}"
-    )
-    unknown = set(_EXPECTED_MULTI) - set(_ALLOWLIST)
-    assert not unknown, f"_EXPECTED_MULTI keys not in allowlist: {unknown}"
+    check(BIGINT, "drifted")
 
 
-@pytest.mark.parametrize("needle", ["decimal-grid", "oracle-only"])
+def test_every_category_is_documented_in_plans_md():
+    check(BIGINT, "undocumented")
+
+
+@pytest.mark.parametrize("needle", BIGINT.categories)
 def test_audited_categories_still_present(needle):
-    """The grid and oracle-raises categories are load-bearing in the
-    PLANS.md table; if a refactor drops the last such site the table
-    needs a rewrite, not a silent shrink."""
-    assert any(v == needle for v in _ALLOWLIST.values())
+    assert needle in {cat for cat, _n in BIGINT.ledger.values()}
+
+
+def test_only_same_line_decimal_code_is_exempt(tmp_path):
+    (tmp_path / "m.py").write_text(
+        'a = F.expr("CAST(SUM(x) AS DECIMAL(38,0)) * 1000000")\n'
+        'b = F.expr("SUM(x) * 1000000")\n'
+        "c = s * 1_000_000  # DECIMAL(38,0) in a comment does not count\n"
+        "d = s * 1000000.0\n"
+    )
+    assert sorted(scan(BIGINT, str(tmp_path))) == [
+        ("m.py", 'b = F.expr("SUM(x) * 1000000")'),
+        ("m.py", "c = s * 1_000_000  # DECIMAL(38,0) in a comment does not count"),
+    ]

@@ -1,316 +1,41 @@
-"""Broadcast-size ledger lint (r12, sixth member of the structural-lint
-family; VERDICT r11 item 7).
+"""Broadcast-size lint: every ``F.broadcast(`` hint in the package claims
+the relation fits on every executor at any corpus size, so each site is
+keyed to a category with a documented row bound.  Ledger: ``BROADCAST``
+in ``ledger_lints.py``; categories: PLANS.md "Broadcast-size ledger"."""
 
-Every ``F.broadcast(`` hint asserts "this relation fits on every
-executor at ANY corpus size".  The crossJoin lint pins that Cartesian
-products have a constant-sized side; this one pins the BOUND behind
-every broadcast hint.  Each site is keyed to a category whose row bound
-is documented in PLANS.md's "Broadcast-size ledger" section — a future
-broadcast of something that grows with the corpus (the classic way a
-bench-tuned plan OOMs its first real cluster) now fails CI as an
-unclassified site instead of shipping silently.
-
-Same mechanics as the BIGINT / materialization / window / udf-crossjoin
-/ persist lints: (package-relative path, stripped line) keys, pinned
-occurrence counts (ADVICE r10 rule: a new duplicate of an allowlisted
-line FAILS rather than inheriting the old adjudication), stale-entry
-failure, and a self-test that every category used here is defined in
-the PLANS.md ledger section so prose and enforcement can't drift apart.
-"""
-
-import os
-import re
-from collections import Counter
-
-from lint_util import strip_comment, strip_comment_lines
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PKG_DIR = os.path.join(_REPO, "data_engineering_etl_demo_spark")
-_PLANS = os.path.join(_REPO, "PLANS.md")
-
-_BCAST_PAT = re.compile(r"\bF\.broadcast\(")
-
-_CATEGORIES = {
-    "static-dim",
-    "sf-dim-pin",
-    "derived-dim",
-    "one-row-total",
-    "bounded-agg",
-    "fitted-model",
-    "literal-const",
-    "query-cohort",
-    "lsh-candidates",
-    "caller-attested",
-}
-
-# (package-relative path, stripped source line) -> (category, occurrences)
-_LEDGER = {
-    ("etl.py",
-     'fact.join(F.broadcast(dim_u), on="user_id", how="left")'):
-        ("derived-dim", 1),
-    ("operators/constraints.py",
-     'keys = F.broadcast(keys)'): ("caller-attested", 1),
-    # LSH-pruned candidate pairs entering the exact-Jaccard verify
-    ("operators/dedup.py",
-     'F.broadcast(pairs)'): ("lsh-candidates", 1),
-    # ADC survivors, |Q|*R rows (rerank input)
-    ("operators/similarity.py",
-     '.join(F.broadcast(cands), "cand_id")'): ("lsh-candidates", 1),
-    ("operators/similarity.py",
-     'c.crossJoin(F.broadcast(q))'): ("query-cohort", 1),
-    ("operators/transform.py",
-     'clean = derived.join(F.broadcast(users_dim), on="user_id", '
-     'how="left").drop('): ("derived-dim", 1),
-    ("operators/warehouse.py",
-     '.join(F.broadcast(dim_c), on="customer_name", how="left")'):
-        ("derived-dim", 1),
-    ("operators/warehouse.py",
-     '.join(F.broadcast(dim_p), on="sku", how="left")'): ("derived-dim", 1),
-    ("operators/warehouse.py",
-     'cleaned.join(F.broadcast(dim_et), on="event", how="left")'):
-        ("derived-dim", 1),
-    ("plans/analytics.py",
-     'F.broadcast(cust), ev["user_id"] == cust["c_custkey"], "left"'):
-        ("sf-dim-pin", 1),
-    # n = 1-row max(doc_id) count (vocab-growth + char-budget variants)
-    ("plans/llmdata.py",
-     '.crossJoin(F.broadcast(n))'): ("one-row-total", 2),
-    # decontamination benchmark gram set (fixed benchmark, not corpus)
-    ("plans/llmdata.py",
-     '.join(F.broadcast(bench), on="g")'): ("query-cohort", 1),
-    # dedup-curve thresholds: local_df over the _CURVE_TS literal (4 rows)
-    ("plans/llmdata.py",
-     'F.broadcast(local_df(spark, [(t,) for t in _CURVE_TS], "t double"))'):
-        ("literal-const", 1),
-    ("plans/llmdata.py",
-     'F.broadcast(lut),'): ("fitted-model", 2),
-    ("plans/llmdata.py",
-     'c.crossJoin(F.broadcast(q))'): ("query-cohort", 1),
-    # 5-row vocab-growth checkpoint grid
-    ("plans/llmdata.py",
-     'first.crossJoin(F.broadcast(cps))'): ("bounded-agg", 1),
-    ("plans/llmdata.py",
-     'per.crossJoin(F.broadcast(tot))'): ("one-row-total", 1),
-    # hamming-rerank query vectors (self-search bench: |Q| = workload)
-    ("plans/llmdata.py",
-     'r.join(F.broadcast(qe), on="query_id")'): ("query-cohort", 1),
-    ("plans/llmdata.py",
-     'words.crossJoin(F.broadcast(q))'): ("query-cohort", 1),
-    ("plans/scale_patterns.py",
-     '.crossJoin(F.broadcast(exact))'): ("one-row-total", 1),
-    ("plans/scale_patterns.py",
-     '.crossJoin(F.broadcast(stats(lp, "lin")))'): ("one-row-total", 1),
-    # bloom-filter word array: 2^bits / 64 longs
-    ("plans/scale_patterns.py",
-     'F.broadcast(w),'): ("fitted-model", 1),
-    ("plans/scale_patterns.py",
-     'li.crossJoin(F.broadcast(bounds))'): ("one-row-total", 1),
-    ("plans/scale_patterns.py",
-     'li.crossJoin(F.broadcast(bounds)).select('): ("one-row-total", 1),
-    # sampled bloom truth set (capped probe cohort)
-    ("plans/scale_patterns.py",
-     'li.join(F.broadcast(truth), on="l_orderkey", how="left")'):
-        ("query-cohort", 1),
-    ("plans/scale_patterns.py",
-     'return agg.crossJoin(F.broadcast(n_bits)).select('):
-        ("one-row-total", 1),
-    ("plans/streaming_plans.py",
-     '.join(F.broadcast(cust), events["user_id"] == cust["c_custkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/timeseries.py",
-     'dev = day_rev.crossJoin(F.broadcast(med)).withColumn('):
-        ("one-row-total", 1),
-    ("plans/timeseries.py",
-     'dev.crossJoin(F.broadcast(mad))'): ("one-row-total", 1),
-    ("plans/timeseries.py",
-     'ed = e.crossJoin(F.broadcast(mx))'): ("one-row-total", 1),
-    # calendar-day span grid
-    ("plans/timeseries.py",
-     'grid = types.crossJoin(F.broadcast(cal))'): ("bounded-agg", 1),
-    # per-pid cumulative offsets: rows = #partitions
-    ("plans/timeseries.py",
-     'h2 = h1.join(F.broadcast(offs), "pid").select('): ("bounded-agg", 1),
-    ("plans/timeseries.py",
-     'h2.crossJoin(F.broadcast(totals))'): ("one-row-total", 1),
-    ("plans/timeseries.py",
-     'v.crossJoin(F.broadcast(st))'): ("one-row-total", 1),
-    ("plans/tpch.py",
-     '.crossJoin(F.broadcast(stats))'): ("one-row-total", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(n1), supp["s_nationkey"] == F.col("n1_key"))'):
-        ("static-dim", 2),
-    ("plans/tpch.py",
-     '.join(F.broadcast(n2), cust["c_nationkey"] == F.col("n2_key"))'):
-        ("static-dim", 2),
-    ("plans/tpch.py",
-     '.join(F.broadcast(nation), cust["c_nationkey"] == '
-     'nation["n_nationkey"])'): ("static-dim", 2),
-    ("plans/tpch.py",
-     '.join(F.broadcast(nation), supp["s_nationkey"] == '
-     'nation["n_nationkey"])'): ("static-dim", 3),
-    ("plans/tpch.py",
-     '.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(part), sq["l_partkey"] == part["p_partkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(region), F.col("n2_rkey") == '
-     'region["r_regionkey"])'): ("static-dim", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(region), nation["n_regionkey"] == '
-     'region["r_regionkey"])'): ("static-dim", 2),
-    ("plans/tpch.py",
-     '.join(F.broadcast(supp), F.col("_late_suppkey") == '
-     'supp["s_suppkey"])'): ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])'):
-        ("sf-dim-pin", 3),
-    ("plans/tpch.py",
-     '.join(F.broadcast(supp), pairs["l_suppkey"] == supp["s_suppkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(supp), rev["l_suppkey"] == supp["s_suppkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     '.join(F.broadcast(supp), sq["l_suppkey"] == supp["s_suppkey"])'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     'F.broadcast(bad_supp),'): ("sf-dim-pin", 1),
-    # percentile-boundary candidate rows (<= flags x percentile tags)
-    ("plans/tpch.py",
-     'F.broadcast(cand),'): ("bounded-agg", 1),
-    ("plans/tpch.py",
-     'F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]'):
-        ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     'F.broadcast(nation),'): ("static-dim", 1),
-    ("plans/tpch.py",
-     'F.broadcast(supp),'): ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     'li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])'):
-        ("sf-dim-pin", 3),
-    ("plans/tpch.py",
-     'pairs.join(F.broadcast(part), F.col("l_partkey") == '
-     'part["p_partkey"])'): ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     'pairs.join(F.broadcast(part), pairs["l_partkey"] == '
-     'part["p_partkey"])'): ("sf-dim-pin", 1),
-    ("plans/tpch.py",
-     'pr.crossJoin(F.broadcast(tot))'): ("one-row-total", 1),
-    ("plans/tpch.py",
-     'rev.crossJoin(F.broadcast(max_rev))'): ("one-row-total", 1),
-    # per-(file, split) line-offset table: rows = #splits
-    ("sources/ingest.py",
-     'txt.join(F.broadcast(off), on=["_file", "_pid"])'): ("bounded-agg", 1),
-}
-
-
-def _iter_source():
-    for root, _dirs, files in os.walk(_PKG_DIR):
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, _PKG_DIR).replace(os.sep, "/")
-            yield rel, path
-
-
-def _scan_broadcasts():
-    found = Counter()
-    for rel, path in _iter_source():
-        with open(path) as f:
-            lines = f.readlines()
-        for line, code in zip(lines, strip_comment_lines(lines)):
-            if _BCAST_PAT.search(code):
-                found[(rel, line.strip())] += 1
-    return found
+from ledger_lints import BROADCAST, check, strip_comment
 
 
 def test_broadcast_pattern_catches_the_forms_it_claims():
-    """Self-test so the scan can't silently rot (family convention, cf.
-    the UDF lint): the hint form matches; commented-out code and the
-    unrelated `sc.broadcast(` variable-broadcast API do not (the latter
-    would be a driver-materialization-lint concern, not a join hint)."""
-    assert _BCAST_PAT.search("df.join(F.broadcast(dim), on='k')")
-    assert _BCAST_PAT.search("keys = F.broadcast(keys)")
-    assert not _BCAST_PAT.search("spark.sparkContext.broadcast(lut)")
-    assert not _BCAST_PAT.search("sc.broadcast(model)")
-    # comment stripping happens before the pattern in _scan_broadcasts
-    line = "x = 1  # F.broadcast(dim) would be wrong here"
-    assert not _BCAST_PAT.search(strip_comment(line))
+    """The hint form matches; commented-out code and the variable
+    broadcast API ``sc.broadcast(`` do not."""
+    pat = BROADCAST.pattern
+    assert pat.search("df.join(F.broadcast(dim), on='k')")
+    assert pat.search("keys = F.broadcast(keys)")
+    assert not pat.search("spark.sparkContext.broadcast(lut)")
+    assert not pat.search("sc.broadcast(model)")
+    assert not pat.search(strip_comment("x = 1  # F.broadcast(dim) would be wrong here"))
 
 
 def test_ledger_is_well_formed():
-    bad = {
-        k: v
-        for k, v in _LEDGER.items()
-        if not (
-            isinstance(v, tuple)
-            and len(v) == 2
-            and v[0] in _CATEGORIES
-            and isinstance(v[1], int)
-            and v[1] >= 1
-        )
-    }
-    assert not bad, f"malformed ledger entry(ies), want (category, n): {bad}"
+    check(BROADCAST, "malformed")
 
 
 def test_every_category_is_documented_in_plans_md():
-    """The ledger section in PLANS.md defines each category's row bound;
-    a category used here but absent there is an undocumented claim."""
-    with open(_PLANS) as f:
-        text = f.read()
-    start = text.find("## Broadcast-size ledger")
-    assert start != -1, "PLANS.md lost its 'Broadcast-size ledger' section"
-    nxt = text.find("\n## ", start + 1)
-    section = text[start:nxt if nxt != -1 else len(text)]
-    undocumented = sorted(
-        c for c in _CATEGORIES if f"`{c}`" not in section
-    )
-    assert not undocumented, (
-        f"categories missing from the PLANS.md ledger: {undocumented}"
-    )
-    unused = sorted(
-        _CATEGORIES - {cat for cat, _n in _LEDGER.values()}
-    )
-    assert not unused, (
-        f"categories defined but keying zero sites (dead doc): {unused}"
-    )
+    check(BROADCAST, "undocumented")
+
+
+def test_every_category_keys_a_site():
+    check(BROADCAST, "unused")
 
 
 def test_every_broadcast_site_is_in_the_ledger():
-    found = _scan_broadcasts()
-    new = sorted(k for k in found if k not in _LEDGER)
-    assert not new, (
-        "unclassified F.broadcast site(s) — every broadcast hint needs a "
-        "documented row bound (PLANS.md 'Broadcast-size ledger'); a "
-        "relation that grows with the corpus must NOT be broadcast: "
-        f"{new}"
-    )
+    check(BROADCAST, "unclassified")
 
 
 def test_broadcast_occurrence_counts_match():
-    found = _scan_broadcasts()
-    drift = {
-        k: (exp, found.get(k, 0))
-        for k, (_cat, exp) in _LEDGER.items()
-        if found.get(k, 0) != exp
-    }
-    assert not drift, (
-        "broadcast-site occurrence drift (key: expected, found) — a new "
-        "duplicate of an allowlisted line must be re-adjudicated, not "
-        f"inherit the old bound: {drift}"
-    )
+    check(BROADCAST, "drifted")
 
 
 def test_ledger_has_no_stale_entries():
-    found = _scan_broadcasts()
-    stale = sorted(k for k in _LEDGER if k not in found)
-    assert not stale, (
-        "ledger entries matching no current source line (site removed or "
-        f"edited — re-classify the new form): {stale}"
-    )
+    check(BROADCAST, "stale")

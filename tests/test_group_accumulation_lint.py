@@ -1,189 +1,52 @@
-"""Per-group accumulation ledger lint (r13, eighth member of the
-structural-lint family).
+"""Per-group accumulation lint: ``collect_list`` / ``collect_set`` /
+``array_agg`` buffer a whole group in one row, so every site, SQL text
+included, is keyed to a category with a documented per-group bound.
+Ledger: ``GROUP`` in ``ledger_lints.py``; categories: PLANS.md
+"Per-group accumulation ledger"."""
 
-``collect_list`` / ``collect_set`` / ``array_agg`` materialize a whole
-GROUP's payload into one aggregation-buffer row.  At 100 TB that is the
-quiet OOM: a hot key (one celebrity user, one boilerplate document, one
-mega-order) turns into a single in-task array no amount of parallelism
-can split — the same class the window-partitioning ledger pins for
-unpartitioned windows, here for grouped array-aggs.  Every site must
-therefore be keyed to a category whose PER-GROUP bound is documented in
-PLANS.md: the group's payload must be an ENTITY's own data (row-scale
-by the same assumption that lets the entity be a row elsewhere), never
-a corpus-scale fan-in.
-
-The scan intentionally matches the function names inside F.expr/SQL
-string literals too — a collect_list smuggled through expr() is the
-same buffer.
-
-Same mechanics as the other seven lints: (package-relative path,
-stripped line) keys, pinned occurrence counts, stale-entry failure, a
-pattern self-test, and a PLANS.md-section well-formedness check.
-"""
-
-import os
-import re
-from collections import Counter
-
-from lint_util import strip_comment, strip_comment_lines
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PKG_DIR = os.path.join(_REPO, "data_engineering_etl_demo_spark")
-_PLANS = os.path.join(_REPO, "PLANS.md")
-
-_ACC_PAT = re.compile(r"\bcollect_list\(|\bcollect_set\(|\barray_agg\(")
-
-_CATEGORIES = {
-    # group key = one entity; the accumulated array is that entity's own
-    # payload (an order's parts, a document's spans) — row-scale by the
-    # same assumption that lets the entity be a row anywhere else
-    "entity-bounded",
-}
-
-# (package-relative path, stripped source line) -> (category, occurrences)
-_LEDGER = {
-    # span-dedup reassembly: one doc's kept spans = that doc's own text
-    ("operators/dedup.py",
-     '"collect_list(CASE WHEN NOT dup THEN struct(k, txt) END)),"'):
-        ("entity-bounded", 1),
-    # r15 group-local LSH pair generation (r16: collect_set — dup-proof,
-    # ADVICE r15 — and the pair expansion now streams through two
-    # explodes instead of flattening W² structs in one row): one (band,
-    # bucket)'s member ids — exactly the rows the old bucket self-join
-    # colocated in one task; bounded by the same bucket width, capped by
-    # the mega-bucket guard (lsh_candidate_pairs max_bucket_width)
-    ("operators/dedup.py",
-     'F.array_sort(F.collect_set(id_col)).alias("_ids")'):
-        ("entity-bounded", 1),
-    ("operators/dedup.py",
-     'F.collect_set(F.when(split, F.col(id_col))).alias("_ex"),'):
-        ("entity-bounded", 1),
-    ("operators/dedup.py",
-     'F.collect_set(F.when(~split, F.col(id_col))).alias("_in"),'):
-        ("entity-bounded", 1),
-    # market-basket: one order's distinct parts (TPC-H: <=7 lines/order)
-    ("plans/tpch.py",
-     '.agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))'):
-        ("entity-bounded", 1),
-}
-
-
-def _iter_source():
-    for root, _dirs, files in os.walk(_PKG_DIR):
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, _PKG_DIR).replace(os.sep, "/")
-            yield rel, path
-
-
-def _scan():
-    found = Counter()
-    for rel, path in _iter_source():
-        with open(path) as f:
-            lines = f.readlines()
-        for line, code in zip(lines, strip_comment_lines(lines)):
-            if _ACC_PAT.search(code):
-                found[(rel, line.strip())] += 1
-    return found
+from ledger_lints import GROUP, check, strip_comment, strip_comment_lines
 
 
 def test_pattern_catches_the_forms_it_claims():
-    """Self-test (family convention): the DataFrame form, the SQL-text
-    form inside an expr string, and the array_agg alias all match;
-    commented-out code and prose mentions without a call paren do not."""
-    assert _ACC_PAT.search('agg(F.collect_list("x"))')
-    assert _ACC_PAT.search('agg(F.collect_set("x"))')
-    assert _ACC_PAT.search('F.expr("collect_list(CASE WHEN a THEN b END)")')
-    assert _ACC_PAT.search('spark.sql("SELECT array_agg(x) FROM t")')
-    assert not _ACC_PAT.search("the collect_list fold would be wrong")
-    line = "y = 1  # collect_list(x) would OOM here"
-    assert not _ACC_PAT.search(strip_comment(line))
-    # A '#' INSIDE a string literal is not a comment: a buffer smuggled
-    # into SQL text after one must still be censused (ADVICE r13 — the
-    # old split('#')[0] idiom truncated here and let it dodge).
-    evasive = "spark.sql(\"SELECT '#' AS h, array_agg(x) FROM t\")"
-    assert _ACC_PAT.search(strip_comment(evasive))
-    # ...and the MULTI-LINE variant (ADVICE r14): a '#' on a
-    # continuation line of a triple-quoted SQL string is still string
-    # text, so a pattern after it must survive strip_comment_lines
-    # (per-line strip_comment under-scans exactly here).
-    multiline = [
-        'q = """SELECT 1\n',
-        "-- see #4: array_agg(x)\n",
-        '"""\n',
-    ]
-    stripped = strip_comment_lines(multiline)
-    assert _ACC_PAT.search(stripped[1]), stripped
-    assert not _ACC_PAT.search(strip_comment(multiline[1]))  # the old hole
-    # comments outside strings still stripped by the multi-line walker
+    """The DataFrame form, the SQL form inside an expr string and the
+    array_agg alias match; commented-out code and prose without a call
+    paren do not.  Comment stripping keeps a '#' inside a string."""
+    pat = GROUP.pattern
+    assert pat.search('agg(F.collect_list("x"))')
+    assert pat.search('agg(F.collect_set("x"))')
+    assert pat.search('F.expr("collect_list(CASE WHEN a THEN b END)")')
+    assert pat.search('spark.sql("SELECT array_agg(x) FROM t")')
+    assert not pat.search("the collect_list fold would be wrong")
+    assert not pat.search(strip_comment("y = 1  # collect_list(x) would OOM here"))
+    # a '#' inside a string literal is not a comment start
+    assert pat.search(strip_comment("spark.sql(\"SELECT '#' AS h, array_agg(x) FROM t\")"))
+    # nor is a '#' on a continuation line of a triple-quoted string,
+    # which the line-at-a-time strip_comment gets wrong
+    multiline = ['q = """SELECT 1\n', "-- see #4: array_agg(x)\n", '"""\n']
+    assert pat.search(strip_comment_lines(multiline)[1])
+    assert not pat.search(strip_comment(multiline[1]))
     assert strip_comment_lines(["x = 1  # collect_list(x)\n"]) == ["x = 1  "]
 
 
 def test_ledger_is_well_formed():
-    bad = {
-        k: v
-        for k, v in _LEDGER.items()
-        if not (
-            isinstance(v, tuple)
-            and len(v) == 2
-            and v[0] in _CATEGORIES
-            and isinstance(v[1], int)
-            and v[1] >= 1
-        )
-    }
-    assert not bad, f"malformed ledger entry(ies), want (category, n): {bad}"
+    check(GROUP, "malformed")
 
 
 def test_every_category_is_documented_in_plans_md():
-    with open(_PLANS) as f:
-        text = f.read()
-    start = text.find("## Per-group accumulation ledger")
-    assert start != -1, (
-        "PLANS.md lost its 'Per-group accumulation ledger' section"
-    )
-    nxt = text.find("\n## ", start + 1)
-    section = text[start:nxt if nxt != -1 else len(text)]
-    undocumented = sorted(c for c in _CATEGORIES if f"`{c}`" not in section)
-    assert not undocumented, (
-        f"categories missing from the PLANS.md ledger: {undocumented}"
-    )
-    unused = sorted(_CATEGORIES - {cat for cat, _n in _LEDGER.values()})
-    assert not unused, (
-        f"categories defined but keying zero sites (dead doc): {unused}"
-    )
+    check(GROUP, "undocumented")
+
+
+def test_every_category_keys_a_site():
+    check(GROUP, "unused")
 
 
 def test_every_accumulation_site_is_in_the_ledger():
-    found = _scan()
-    new = sorted(k for k in found if k not in _LEDGER)
-    assert not new, (
-        "unclassified collect_list/collect_set/array_agg site(s) — every "
-        "grouped array-agg needs a documented per-group bound (PLANS.md "
-        "'Per-group accumulation ledger'); a corpus-scale fan-in must be "
-        f"restructured, not buffered: {new}"
-    )
+    check(GROUP, "unclassified")
 
 
 def test_occurrence_counts_match():
-    found = _scan()
-    drift = {
-        k: (exp, found.get(k, 0))
-        for k, (_cat, exp) in _LEDGER.items()
-        if found.get(k, 0) != exp
-    }
-    assert not drift, (
-        "accumulation-site occurrence drift (key: expected, found) — a "
-        "new duplicate of an allowlisted line must be re-adjudicated, "
-        f"not inherit the old bound: {drift}"
-    )
+    check(GROUP, "drifted")
 
 
 def test_ledger_has_no_stale_entries():
-    found = _scan()
-    stale = sorted(k for k in _LEDGER if k not in found)
-    assert not stale, (
-        "ledger entries matching no current source line (site removed or "
-        f"edited — re-classify the new form): {stale}"
-    )
+    check(GROUP, "stale")

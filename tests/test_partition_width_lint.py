@@ -1,219 +1,67 @@
-"""Partition-width provenance ledger lint (r13, seventh member of the
-structural-lint family).
+"""Partition-width lint: every explicit ``.repartition(`` /
+``.repartitionByRange(`` / ``.coalesce(N>1)`` is keyed to where its
+width comes from, and no site passes a bare integer width.  Ledger:
+``WIDTH`` in ``ledger_lints.py``; categories: PLANS.md
+"Partition-width ledger"."""
 
-Every explicit ``.repartition(`` / ``.repartitionByRange(`` /
-``.coalesce(N>1)`` site hardcodes a decision about PHYSICAL WIDTH.  A
-width literal tuned to the local[32] bench geometry is the quiet way a
-plan that "works" here starves a 1000-executor cluster (32 tasks on
-4,000 cores) or floods a small one.  This ledger pins the PROVENANCE of
-every width: it must come from the session (defaultParallelism /
-``spark.sql.shuffle.partitions``), be computed from the data (bytes /
-target-size), or be an explicitly caller-attested parameter — never a
-bare constant born from what happened to bench well.
-
-Division of labour with the sibling lints: the driver-materialization
-ledger owns the ``.coalesce(1)`` funnel class (is collapsing to ONE
-task bounded?); this lint owns every other explicit width (does the
-count SCALE?).  The scan therefore matches ``.coalesce(`` except the
-exact ``.coalesce(1)`` form, so a future ``.coalesce(8)`` cannot dodge
-both ledgers.
-
-Same mechanics as the broadcast / BIGINT / materialization / window /
-udf-crossjoin / persist lints: (package-relative path, stripped line)
-keys, pinned occurrence counts (a new duplicate of an allowlisted line
-FAILS rather than inheriting the old adjudication), stale-entry
-failure, a pattern self-test, and a PLANS.md section defining each
-category so prose and enforcement can't drift apart.
-"""
-
-import os
-import re
-from collections import Counter
-
-from lint_util import strip_comment, strip_comment_lines
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PKG_DIR = os.path.join(_REPO, "data_engineering_etl_demo_spark")
-_PLANS = os.path.join(_REPO, "PLANS.md")
-
-# DataFrame-level width controls.  (?<!\bF) drops exactly the COLUMN
-# function F.coalesce(...): the lookbehind requires the single token "F"
-# immediately before the dot, so a DataFrame receiver that merely ends
-# in an uppercase letter (dfA.coalesce(8), outF.repartition(...)) stays
-# in the census — the old (?<![A-Z]) silently excluded those (ADVICE
-# r13).  (?!1\)) drops the .coalesce(1) funnel form, which the
-# driver-materialization ledger owns.
-_WIDTH_PAT = re.compile(
-    r"(?<!\bF)\.(?:repartition|repartitionByRange)\("
-    r"|(?<!\bF)\.coalesce\((?!1\))"
-)
-
-_CATEGORIES = {
-    # width = session geometry (defaultParallelism or the
-    # spark.sql.shuffle.partitions conf, explicit or implicit) — scales
-    # with the cluster by construction
-    "session-width",
-    # width computed from the data (input bytes / target file size) —
-    # scales with the corpus by construction
-    "data-derived",
-    # width is a documented API parameter the caller must size; the
-    # operator makes no geometry assumption of its own
-    "caller-attested",
-}
-
-# (package-relative path, stripped source line) -> (category, occurrences)
-_LEDGER = {
-    # zorder_rewrite(n_files=...) — API parameter, no internal default
-    ("operators/layout.py",
-     'zed.repartitionByRange(n_files, "__z")'): ("caller-attested", 1),
-    # compaction: n_out = ceil(total_bytes / target_bytes)
-    ("operators/maintenance.py",
-     'df.repartition(n_out).write.mode("overwrite").parquet(staging)'):
-        ("data-derived", 1),
-    # kernel-input spread: explicit defaultParallelism (arg on next line)
-    ("plans/llmdata.py",
-     'emb = load(spark, sf_dir, "embeddings").repartition('):
-        ("session-width", 1),
-    ("plans/llmdata.py",
-     'return docs.repartition(spark.sparkContext.defaultParallelism)'):
-        ("session-width", 1),
-    # EMA fold: n_part = defaultParallelism, hash on user_id
-    ("plans/timeseries.py",
-     'e.repartition(n_part, "user_id")'): ("session-width", 1),
-    # histogram ranges: no explicit N -> session shuffle.partitions
-    ("plans/timeseries.py",
-     'h.repartitionByRange("c").withColumn('): ("session-width", 1),
-    # basket pairs: n_shuffle = spark.sql.shuffle.partitions conf
-    ("plans/tpch.py",
-     'pairs.repartition(n_shuffle, "pair")'): ("session-width", 1),
-}
-
-
-def _iter_source():
-    for root, _dirs, files in os.walk(_PKG_DIR):
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, _PKG_DIR).replace(os.sep, "/")
-            yield rel, path
-
-
-def _scan_widths():
-    found = Counter()
-    for rel, path in _iter_source():
-        with open(path) as f:
-            lines = f.readlines()
-        for line, code in zip(lines, strip_comment_lines(lines)):
-            if _WIDTH_PAT.search(code):
-                found[(rel, line.strip())] += 1
-    return found
+from ledger_lints import WIDTH, bare_width_literals, check, strip_comment
 
 
 def test_width_pattern_catches_the_forms_it_claims():
-    """Self-test so the scan can't silently rot (family convention):
-    DataFrame width controls match; the F.coalesce COLUMN function and
-    the materialization-ledger-owned .coalesce(1) form do not; a
-    .coalesce(N>1) that would dodge the materialization lint DOES."""
-    assert _WIDTH_PAT.search('df.repartition(8)')
-    assert _WIDTH_PAT.search('df.repartition(n, "key")')
-    assert _WIDTH_PAT.search('zed.repartitionByRange(n_files, "__z")')
-    assert _WIDTH_PAT.search('h.repartitionByRange("c")')
-    assert _WIDTH_PAT.search('df.coalesce(8)')
-    assert _WIDTH_PAT.search('df.coalesce(16).write')
-    assert not _WIDTH_PAT.search('df.coalesce(1).write')
-    assert not _WIDTH_PAT.search('F.coalesce(F.col("v"), F.lit(0.0))')
-    assert not _WIDTH_PAT.search('money_sum(F.coalesce(x, y))')
-    # comment stripping happens before the pattern in _scan_widths
-    line = "x = 1  # df.repartition(32) would be wrong here"
-    assert not _WIDTH_PAT.search(strip_comment(line))
+    """DataFrame width controls match, a receiver ending in a capital
+    included; the F.coalesce column function and the driver ledger's
+    .coalesce(1) do not."""
+    pat = WIDTH.pattern
+    assert pat.search("df.repartition(8)")
+    assert pat.search('df.repartition(n, "key")')
+    assert pat.search('zed.repartitionByRange(n_files, "__z")')
+    assert pat.search('h.repartitionByRange("c")')
+    assert pat.search("df.coalesce(8)")
+    assert pat.search("dfA.coalesce(16).write")
+    assert not pat.search("df.coalesce(1).write")
+    assert not pat.search('F.coalesce(F.col("v"), F.lit(0.0))')
+    assert not pat.search("money_sum(F.coalesce(x, y))")
+    assert not pat.search(strip_comment("x = 1  # df.repartition(32) would be wrong here"))
 
 
 def test_ledger_is_well_formed():
-    bad = {
-        k: v
-        for k, v in _LEDGER.items()
-        if not (
-            isinstance(v, tuple)
-            and len(v) == 2
-            and v[0] in _CATEGORIES
-            and isinstance(v[1], int)
-            and v[1] >= 1
-        )
-    }
-    assert not bad, f"malformed ledger entry(ies), want (category, n): {bad}"
+    check(WIDTH, "malformed")
 
 
 def test_every_category_is_documented_in_plans_md():
-    with open(_PLANS) as f:
-        text = f.read()
-    start = text.find("## Partition-width ledger")
-    assert start != -1, "PLANS.md lost its 'Partition-width ledger' section"
-    nxt = text.find("\n## ", start + 1)
-    section = text[start:nxt if nxt != -1 else len(text)]
-    undocumented = sorted(c for c in _CATEGORIES if f"`{c}`" not in section)
-    assert not undocumented, (
-        f"categories missing from the PLANS.md ledger: {undocumented}"
-    )
-    unused = sorted(_CATEGORIES - {cat for cat, _n in _LEDGER.values()})
-    assert not unused, (
-        f"categories defined but keying zero sites (dead doc): {unused}"
-    )
+    check(WIDTH, "undocumented")
+
+
+def test_every_category_keys_a_site():
+    check(WIDTH, "unused")
 
 
 def test_every_width_site_is_in_the_ledger():
-    found = _scan_widths()
-    new = sorted(k for k in found if k not in _LEDGER)
-    assert not new, (
-        "unclassified partition-width site(s) — every explicit "
-        "repartition/coalesce width needs a provenance category "
-        "(PLANS.md 'Partition-width ledger'); a width literal tuned to "
-        f"the bench geometry must not ship silently: {new}"
-    )
+    check(WIDTH, "unclassified")
 
 
 def test_width_occurrence_counts_match():
-    found = _scan_widths()
-    drift = {
-        k: (exp, found.get(k, 0))
-        for k, (_cat, exp) in _LEDGER.items()
-        if found.get(k, 0) != exp
-    }
-    assert not drift, (
-        "width-site occurrence drift (key: expected, found) — a new "
-        "duplicate of an allowlisted line must be re-adjudicated, not "
-        f"inherit the old provenance: {drift}"
-    )
+    check(WIDTH, "drifted")
 
 
 def test_ledger_has_no_stale_entries():
-    found = _scan_widths()
-    stale = sorted(k for k in _LEDGER if k not in found)
-    assert not stale, (
-        "ledger entries matching no current source line (site removed or "
-        f"edited — re-classify the new form): {stale}"
-    )
+    check(WIDTH, "stale")
 
 
 def test_no_bare_integer_width_literals():
-    """Belt-and-braces beyond the ledger: no site may pass a bare integer
-    literal >1 as the width (even a ledgered one — the ledger pins
-    provenance, this pins the syntactic form).  A width must arrive
-    through a named value whose derivation the ledger adjudicates."""
-    bad = []
-    lit = re.compile(
-        r"(?<![A-Z])\.(?:repartition|repartitionByRange|coalesce)\(\s*(\d+)"
+    bad = bare_width_literals()
+    assert not bad, f"bare integer width literal(s); derive from the session or the data: {bad}"
+
+
+def test_bare_width_check_rejects_a_literal(tmp_path):
+    (tmp_path / "m.py").write_text(
+        "a = df.repartition(32)\n"
+        "b = dfA.coalesce(8)\n"
+        "c = df.coalesce(1)\n"
+        "d = df.repartition(n)\n"
+        "e = F.coalesce(x, 0)  # df.repartition(16)\n"
     )
-    for rel, path in _iter_source():
-        with open(path) as f:
-            lines = f.readlines()
-        for lineno, (line, code) in enumerate(
-            zip(lines, strip_comment_lines(lines)), 1
-        ):
-            m = lit.search(code)
-            if m and int(m.group(1)) > 1:
-                bad.append(f"{rel}:{lineno}: {line.strip()}")
-    assert not bad, (
-        f"bare integer width literal(s) — derive from the session or the "
-        f"data instead: {bad}"
-    )
+    assert bare_width_literals(str(tmp_path)) == [
+        "m.py:1: a = df.repartition(32)",
+        "m.py:2: b = dfA.coalesce(8)",
+    ]

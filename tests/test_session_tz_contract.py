@@ -24,7 +24,7 @@ off-by-five-hours oracle mismatch.
 import os
 import re
 
-from lint_util import strip_comment_lines
+from ledger_lints import strip_comment_lines
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG_DIR = os.path.join(_REPO, "data_engineering_etl_demo_spark")
@@ -68,7 +68,7 @@ def _builder_sites():
         # commented-out `.config("spark.sql.session.timeZone", "UTC")`
         # near an unpinned builder must not satisfy the pin search.
         # Multi-line-aware so a '#' inside a triple-quoted string in
-        # the window can't truncate real code (lint_util docstring).
+        # the window can't truncate real code (ledger_lints.strip_comment_lines).
         stripped = strip_comment_lines(lines)
         for i, code in enumerate(stripped):
             if re.search(r"SparkSession\.builder\b", code):

@@ -1,207 +1,46 @@
-"""UDF + crossJoin lint (r11, fourth member of the structural-lint
-family): converts two per-round hand-sweeps the r8-r10 reviews repeated
-verbatim into CI.
+"""UDF + crossJoin lint: the package has no row-at-a-time Python UDF (a
+ledger with no allowed entries), and every ``.crossJoin(`` is classified
+by why one side is constant-sized.  Ledgers: ``UDF`` and ``CROSSJOIN``
+in ``ledger_lints.py``; categories: PLANS.md "UDF + crossJoin ledger"."""
 
-1. **Zero row-at-a-time Python UDFs.**  Every kernel in the package is
-   either pure column expressions (JVM whole-stage codegen) or an
-   Arrow-batched pandas function (`pandas_udf` / `applyInPandas` /
-   `mapInPandas`); `F.udf` / `@udf` serializes one Python call per ROW —
-   10-100x slower — and must never enter the hot path.  The lint fails
-   on any appearance of the row-at-a-time form.
-
-2. **Every `.crossJoin(` site is classified.**  A Cartesian product is
-   the canonical 100 TB scale-killer UNLESS one side is constant-sized;
-   each site must be allowlisted as:
-
-   broadcast-constant     the other side is an explicit F.broadcast of a
-                          bounded aggregate / constant relation (the
-                          scalar-total join pattern: per-row work joins a
-                          1-row or <=k-row reduction)
-   one-row-aggregate      both sides are global aggregates (exactly one
-                          row each) — the product is 1x1; no hint needed
-   bounded-sample-baseline the documented quadratic truth/baseline path
-                          over an explicitly bounded sample (exact
-                          all-pairs Jaccard on a capped cohort); the
-                          scale path is the banded LSH variant
-
-Keys are (package-relative path, stripped line) with pinned occurrence
-counts (ADVICE r10 rule) and stale-entry failure, matching the BIGINT,
-materialization, and window lints.
-"""
-
-import os
-import re
-from collections import Counter
-
-from lint_util import strip_comment, strip_comment_lines
-
-_PKG_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "data_engineering_etl_demo_spark",
-)
-
-# Row-at-a-time forms only: F.udf(...), bare @udf / @F.udf decorators,
-# and `udf(` calls.  pandas_udf / applyInPandas / mapInPandas are the
-# sanctioned Arrow-batched paths and must NOT match.
-_UDF_PAT = re.compile(r"(?<!pandas_)\budf\s*\(|@\s*(?:F\s*\.\s*)?udf\b")
-
-_CROSS_PAT = re.compile(r"\.crossJoin\(")
-
-_CATEGORIES = {
-    "broadcast-constant",
-    "one-row-aggregate",
-    "bounded-sample-baseline",
-}
-
-_CROSS_ALLOWLIST = {
-    ("operators/similarity.py", "c.crossJoin(F.broadcast(q))"):
-        ("broadcast-constant", 1),
-    # broadcast(createDataFrame(_CURVE_TS)) begins on the next line
-    ("plans/llmdata.py", ".crossJoin("): ("broadcast-constant", 1),
-    ("plans/llmdata.py", ".crossJoin(F.broadcast(n))"):
-        ("broadcast-constant", 2),
-    # docs_ngram_jaccard: exact all-pairs on a bounded sample (docstring)
-    ("plans/llmdata.py", "a.crossJoin(b)"): ("bounded-sample-baseline", 1),
-    ("plans/llmdata.py", "c.crossJoin(F.broadcast(q))"):
-        ("broadcast-constant", 1),
-    ("plans/llmdata.py", "first.crossJoin(F.broadcast(cps))"):
-        ("broadcast-constant", 1),
-    ("plans/llmdata.py", "per.crossJoin(F.broadcast(tot))"):
-        ("broadcast-constant", 1),
-    # (r16: recall_sample's n_truth x n_hit crossJoin removed — both
-    # counts now come from one aggregate over the marked truth relation)
-    ("plans/llmdata.py", "words.crossJoin(F.broadcast(q))"):
-        ("broadcast-constant", 1),
-    ("plans/scale_patterns.py", ".crossJoin(F.broadcast(exact))"):
-        ("broadcast-constant", 1),
-    ("plans/scale_patterns.py", '.crossJoin(F.broadcast(stats(lp, "lin")))'):
-        ("broadcast-constant", 1),
-    ("plans/scale_patterns.py", "li.crossJoin(F.broadcast(bounds))"):
-        ("broadcast-constant", 1),
-    ("plans/scale_patterns.py", "li.crossJoin(F.broadcast(bounds)).select("):
-        ("broadcast-constant", 1),
-    ("plans/scale_patterns.py",
-     "return agg.crossJoin(F.broadcast(n_bits)).select("):
-        ("broadcast-constant", 1),
-    ("plans/timeseries.py",
-     "dev = day_rev.crossJoin(F.broadcast(med)).withColumn("):
-        ("broadcast-constant", 1),
-    ("plans/timeseries.py", "dev.crossJoin(F.broadcast(mad))"):
-        ("broadcast-constant", 1),
-    ("plans/timeseries.py", "ed = e.crossJoin(F.broadcast(mx))"):
-        ("broadcast-constant", 1),
-    ("plans/timeseries.py", "grid = types.crossJoin(F.broadcast(cal))"):
-        ("broadcast-constant", 1),
-    ("plans/timeseries.py", "h2.crossJoin(F.broadcast(totals))"):
-        ("broadcast-constant", 1),
-    # A/B arms: each side a 1-row filtered aggregate
-    ("plans/timeseries.py", "return a.crossJoin(b).select("):
-        ("one-row-aggregate", 1),
-    # totals is a 1-row global aggregate; shares is the bounded share table
-    ("plans/timeseries.py", "return totals.crossJoin(shares).select("):
-        ("one-row-aggregate", 1),
-    ("plans/timeseries.py", "v.crossJoin(F.broadcast(st))"):
-        ("broadcast-constant", 1),
-    ("plans/tpch.py", ".crossJoin(F.broadcast(stats))"):
-        ("broadcast-constant", 1),
-    ("plans/tpch.py", "pr.crossJoin(F.broadcast(tot))"):
-        ("broadcast-constant", 1),
-    ("plans/tpch.py", "rev.crossJoin(F.broadcast(max_rev))"):
-        ("broadcast-constant", 1),
-}
-
-
-def _iter_source():
-    for root, _dirs, files in os.walk(_PKG_DIR):
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, _PKG_DIR).replace(os.sep, "/")
-            yield rel, path
-
-
-def _scan_cross():
-    found = Counter()
-    for rel, path in _iter_source():
-        with open(path) as f:
-            for line in f:
-                if _CROSS_PAT.search(line):
-                    found[(rel, line.strip())] += 1
-    return found
+from ledger_lints import CROSSJOIN, UDF, check
 
 
 def test_no_row_at_a_time_python_udfs():
-    hits = []
-    for rel, path in _iter_source():
-        with open(path) as f:
-            lines = f.readlines()
-        for i, (line, code) in enumerate(
-            zip(lines, strip_comment_lines(lines)), 1
-        ):
-            if _UDF_PAT.search(code):
-                hits.append(f"{rel}:{i}: {line.strip()}")
-    assert not hits, (
-        "row-at-a-time Python UDF in the package — use column "
-        "expressions or an Arrow-batched pandas_udf/applyInPandas/"
-        f"mapInPandas instead: {hits}"
-    )
+    check(UDF, "unclassified")
 
 
 def test_udf_pattern_catches_the_forms_it_claims():
-    """Self-test so the negative lookbehind can't silently rot: the
-    sanctioned Arrow forms pass, the row-at-a-time forms fail."""
-    assert not _UDF_PAT.search("@pandas_udf('long')")
-    assert not _UDF_PAT.search("F.pandas_udf(fn, 'long')")
-    assert not _UDF_PAT.search("df.mapInPandas(fn, schema)")
-    assert _UDF_PAT.search("F.udf(lambda x: x)")
-    assert _UDF_PAT.search("@udf('string')")
-    assert _UDF_PAT.search("@F.udf('string')")
-    assert _UDF_PAT.search("my = udf(fn)")
+    """The Arrow-batched forms pass, the row-at-a-time forms match."""
+    pat = UDF.pattern
+    assert not pat.search("@pandas_udf('long')")
+    assert not pat.search("F.pandas_udf(fn, 'long')")
+    assert not pat.search("df.mapInPandas(fn, schema)")
+    assert pat.search("F.udf(lambda x: x)")
+    assert pat.search("@udf('string')")
+    assert pat.search("@F.udf('string')")
+    assert pat.search("my = udf(fn)")
 
 
 def test_crossjoin_allowlist_is_well_formed():
-    bad = {
-        k: v
-        for k, v in _CROSS_ALLOWLIST.items()
-        if not (
-            isinstance(v, tuple)
-            and len(v) == 2
-            and v[0] in _CATEGORIES
-            and isinstance(v[1], int)
-            and v[1] >= 1
-        )
-    }
-    assert not bad, f"malformed classification(s), want (category, n): {bad}"
+    check(CROSSJOIN, "malformed")
 
 
 def test_every_crossjoin_is_classified():
-    found = _scan_cross()
-    new = [k for k in found if k not in _CROSS_ALLOWLIST]
-    assert not new, (
-        "unclassified crossJoin site(s) — a Cartesian product must have "
-        "a constant-sized side (broadcast-constant / one-row-aggregate) "
-        f"or be a documented bounded-sample baseline: {new}"
-    )
+    check(CROSSJOIN, "unclassified")
 
 
 def test_crossjoin_occurrence_counts_match():
-    found = _scan_cross()
-    drift = {
-        k: (exp, found.get(k, 0))
-        for k, (_cat, exp) in _CROSS_ALLOWLIST.items()
-        if found.get(k, 0) != exp
-    }
-    assert not drift, (
-        "crossJoin occurrence drift (key: expected, found) — "
-        f"re-adjudicate each site and update the count: {drift}"
-    )
+    check(CROSSJOIN, "drifted")
 
 
 def test_crossjoin_allowlist_has_no_stale_entries():
-    found = _scan_cross()
-    stale = [k for k in _CROSS_ALLOWLIST if k not in found]
-    assert not stale, (
-        "allowlist entries matching no current source line (site removed "
-        f"or edited — re-classify the new form): {stale}"
-    )
+    check(CROSSJOIN, "stale")
+
+
+def test_every_category_is_documented_in_plans_md():
+    check(CROSSJOIN, "undocumented")
+
+
+def test_every_category_keys_a_site():
+    check(CROSSJOIN, "unused")

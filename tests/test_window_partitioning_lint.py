@@ -1,264 +1,50 @@
-"""Window-partitioning lint (r11, VERDICT r10 item 8 — third member of
-the structural-lint family after the BIGINT grid and the driver-
-materialization ledger): a window function has NO map-side partial
-aggregation — Spark materializes each partition group in one task — so
-an unpartitioned (global) window, or a bounded-vocabulary key over
-row-grain input, is the "no global windows" scale risk of SURVEY §7.7.
-Every `Window.partitionBy(...)` / `Window.orderBy(...)` declaration in
-the plans package must be classified here:
+"""Window-partitioning lint: a window has no map-side partial
+aggregation, so every ``Window.partitionBy`` / ``Window.orderBy``
+declaration in the package is classified by why its groups stay
+task-sized, and a global window may only carry a global-safe category.
+Ledger: ``WINDOW`` in ``ledger_lints.py``; categories: PLANS.md
+"Window-partitioning ledger"."""
 
-  high-cardinality-key   the partition key's group count scales with the
-                         data (user_id, doc_id, query_id, purchase_id,
-                         o_custkey, p_partkey, CC component, …) so
-                         per-task group state stays bounded at 100 TB
-  reduced-input          the window consumes a relation ALREADY reduced
-                         by aggregation/sampling to a size bounded by
-                         construction — price-bucket histograms, per-salt
-                         survivors, per-spark-partition sums, month/day/
-                         bucket series, per-(cohort, age) cells
-  bounded-vocab-audited  a bounded key over row-grain input — allowed
-                         only with a written audit (docstring or PLANS.md
-                         section) of the group-size behavior at scale:
-                         the corpus-packing per-source prefix sum, the
-                         per-nation deciles (docstring routes global
-                         quantiles to the two-pass histogram), the
-                         KMV/top-K per-event_type ranks (output capped
-                         at K rows per group), the bucket-capped
-                         quantile-sample rank (~n/|buckets| per group)
-  salted-two-phase       the deliberately salt-widened FIRST phase of a
-                         documented two-level pattern (stratified-sample
-                         w1; its w2 second phase is reduced-input)
-  layout-simulation      a deliberate global sort standing in for a
-                         writer's range partitioning so a read-side
-                         layout experiment has a comparator (the
-                         zone-map linear-layout baseline)
-
-Structural rule on top of the classification: a GLOBAL window form —
-`Window.orderBy(...)` with no partitionBy, or `Window.partitionBy()`
-with no keys — may only carry `reduced-input` or `layout-simulation`;
-classifying one as high-cardinality would be self-contradictory and the
-lint rejects it.
-
-A NEW window declaration fails until classified; keys are (file,
-stripped line) with pinned occurrence counts (the ADVICE r10 rule: a
-second occurrence of an existing line must be re-adjudicated, not
-inherit the old classification); stale entries fail.
-
-groupBy is deliberately NOT linted here: hash aggregation partial-
-aggregates map-side (one combined row per key per task before the
-exchange), so key cardinality shapes skew — handled by the salting
-patterns and the PLANS.md audits — not task-memory correctness, which
-is the window-specific failure this lint guards.
-"""
-
-import os
-import re
-from collections import Counter
-
-_PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "data_engineering_etl_demo_spark",
-    "plans",
-)
-
-# A declaration starts a window chain on the Window class itself;
-# chained `.orderBy(...)` after `Window.partitionBy(...)` on the same
-# or a later line is part of the same declaration and not re-matched.
-_PAT = re.compile(r"Window\s*\.\s*(partitionBy|orderBy)\s*\(")
-
-# Global forms: Window.orderBy as the chain HEAD, or partitionBy with
-# nothing before the closing paren on the same line.
-_GLOBAL_PAT = re.compile(r"Window\s*\.\s*(orderBy\s*\(|partitionBy\s*\(\s*\))")
-
-_CATEGORIES = {
-    "high-cardinality-key",
-    "reduced-input",
-    "bounded-vocab-audited",
-    "salted-two-phase",
-    "layout-simulation",
-}
-
-_GLOBAL_OK = {"reduced-input", "layout-simulation"}
-
-_ALLOWLIST = {
-    ("analytics.py", 'Window.partitionBy("user_id", "event")'):
-        ("high-cardinality-key", 1),
-    ("llmdata.py", 'Window.partitionBy("source")'):
-        ("bounded-vocab-audited", 2),  # corpus-packing prefix sums; PLANS.md
-    ("llmdata.py",
-     'w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), '
-     'F.col("tok"))'): ("high-cardinality-key", 1),
-    ("llmdata.py",
-     'w = Window.partitionBy("lang").orderBy("mean_bits_e6", "doc_id")'):
-        ("bounded-vocab-audited", 1),  # per-lang ntile, perplexity buckets
-    ("llmdata.py", 'w = Window.partitionBy("query_id").orderBy('):
-        ("high-cardinality-key", 5),
-    ("llmdata.py",
-     'w1 = Window.partitionBy("lang", "_salt").orderBy("h", "doc_id")'):
-        ("salted-two-phase", 1),
-    ("llmdata.py", 'w2 = Window.partitionBy("lang").orderBy("h", "doc_id")'):
-        ("reduced-input", 1),  # per-salt survivors, <= SALTS*M rows per lang
-    ("llmdata.py", 'w_adc = Window.partitionBy("query_id").orderBy('):
-        ("high-cardinality-key", 1),
-    ("llmdata.py", 'w_rank = Window.partitionBy("component").orderBy('):
-        ("high-cardinality-key", 1),
-    ("llmdata.py", 'w_size = Window.partitionBy("component")'):
-        ("high-cardinality-key", 1),
-    ("llmdata.py",
-     'wh = Window.partitionBy("query_id").orderBy("hamming", "cand_id")'):
-        ("high-cardinality-key", 1),
-    ("llmdata.py", 'wr = Window.partitionBy("query_id").orderBy('):
-        ("high-cardinality-key", 1),
-    ("scale_patterns.py", 'Window.partitionBy("event_type").orderBy('):
-        ("bounded-vocab-audited", 1),  # heavy-hitters top-K rank
-    ("scale_patterns.py", "w = Window.orderBy("):
-        ("layout-simulation", 1),  # zonemap linear-layout comparator
-    ("streaming_plans.py", 'Window.partitionBy("user_id")'):
-        ("high-cardinality-key", 1),
-    # r15: Markov per-row emission — the converted flag rides a window
-    # max on the same (user_id, sid) session key the ws window uses
-    ("timeseries.py", 'wp = Window.partitionBy("user_id", "sid")'):
-        ("high-cardinality-key", 1),
-    ("timeseries.py", 'Window.orderBy("bucket").rowsBetween('):
-        ("reduced-input", 1),  # histogram buckets
-    ("timeseries.py",
-     'Window.partitionBy("event_type", "day").orderBy(F.col("h"))'):
-        ("bounded-vocab-audited", 1),  # KMV sketch, output capped at K
-    ("timeseries.py",
-     'Window.partitionBy("event_type", "par").orderBy(F.col("h"))'):
-        ("bounded-vocab-audited", 1),  # KMV sketch, output capped at K
-    # r16: kmv_intersect union rank — runs on rows already capped at
-    # <= 2K per event_type by the per-cohort _rn <= k filter above it
-    ("timeseries.py", 'Window.partitionBy("event_type").orderBy(F.col("h"))'):
-        ("reduced-input", 1),
-    ("timeseries.py", 'Window.partitionBy("pid")'):
-        ("reduced-input", 1),  # concentration histogram rows
-    ("timeseries.py", 'Window.partitionBy("user_id")'):
-        ("high-cardinality-key", 1),
-    ("timeseries.py", 'w = Window.orderBy("month_us")'):
-        ("reduced-input", 1),  # monthly revenue series
-    ("timeseries.py", 'w = Window.partitionBy("user_id")'):
-        ("high-cardinality-key", 1),
-    ("timeseries.py",
-     'w = Window.partitionBy("user_id").orderBy("t", "event_id")'):
-        ("high-cardinality-key", 1),
-    ("timeseries.py",
-     'w = Window.partitionBy("user_id").orderBy(F.col("ts"), '
-     'F.col("event_id"))'): ("high-cardinality-key", 2),
-    ("timeseries.py", "w_all = Window.partitionBy()"):
-        ("reduced-input", 1),  # per-day revenue aggregate (lower median)
-    ("timeseries.py",
-     'w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, '
-     "-1)"): ("reduced-input", 1),  # one row per spark partition
-    ("timeseries.py", 'w_rn = Window.orderBy(F.col(val), F.col("day"))'):
-        ("reduced-input", 1),  # per-day revenue aggregate (lower median)
-    ("timeseries.py", 'wp = Window.partitionBy("purchase_id")'):
-        ("high-cardinality-key", 1),
-    ("timeseries.py",
-     'ws = Window.partitionBy("user_id", "sid").orderBy("t", "event_id")'):
-        ("high-cardinality-key", 1),
-    ("tpch.py", 'Window.partitionBy("l_returnflag")'):
-        ("reduced-input", 1),  # price-bucket histogram (w_cum)
-    ("tpch.py", 'w = Window.partitionBy("c_nationkey").orderBy('):
-        ("bounded-vocab-audited", 1),  # deciles; docstring routes global
-    ("tpch.py", 'w = Window.partitionBy("cohort_m").orderBy("age_months")'):
-        ("reduced-input", 1),  # per-(cohort, age) cells
-    ("tpch.py", 'w = Window.partitionBy("l_partkey")'):
-        ("high-cardinality-key", 1),
-    ("tpch.py", 'w = Window.partitionBy("o_custkey")'):
-        ("high-cardinality-key", 1),
-    ("tpch.py", 'w = Window.partitionBy("o_custkey").orderBy('):
-        ("high-cardinality-key", 1),
-    ("tpch.py", 'w = Window.partitionBy("p_partkey").orderBy('):
-        ("high-cardinality-key", 1),
-    ("tpch.py", 'w_all = Window.partitionBy("l_returnflag")'):
-        ("reduced-input", 1),  # price-bucket histogram
-    ("tpch.py",
-     'w_rank = Window.partitionBy("c_flag", "ptag").orderBy('
-     '"l_extendedprice")'):
-        ("bounded-vocab-audited", 1),  # bucket-capped ~n/|buckets| comment
-}
-
-
-def _scan():
-    found = Counter()
-    for fname in sorted(os.listdir(_PLANS_DIR)):
-        if not fname.endswith(".py"):
-            continue
-        with open(os.path.join(_PLANS_DIR, fname)) as f:
-            for line in f:
-                if _PAT.search(line):
-                    found[(fname, line.strip())] += 1
-    return found
+from ledger_lints import WINDOW, check, misclassified_global_windows
 
 
 def test_allowlist_entries_are_well_formed():
-    bad = {
-        k: v
-        for k, v in _ALLOWLIST.items()
-        if not (
-            isinstance(v, tuple)
-            and len(v) == 2
-            and v[0] in _CATEGORIES
-            and isinstance(v[1], int)
-            and v[1] >= 1
-        )
-    }
-    assert not bad, f"malformed classification(s), want (category, n): {bad}"
+    check(WINDOW, "malformed")
 
 
 def test_every_window_declaration_is_classified():
-    found = _scan()
-    new = [k for k in found if k not in _ALLOWLIST]
-    assert not new, (
-        "unclassified Window declaration(s) in the plans package — a "
-        "window materializes each partition group in one task, so the "
-        "key must be classified (high-cardinality / reduced-input / "
-        f"audited bounded-vocab / …) before it ships: {new}"
-    )
+    check(WINDOW, "unclassified")
 
 
 def test_window_occurrence_counts_match():
-    found = _scan()
-    drift = {
-        k: (exp, found.get(k, 0))
-        for k, (_cat, exp) in _ALLOWLIST.items()
-        if found.get(k, 0) != exp
-    }
-    assert not drift, (
-        "window-declaration occurrence drift (key: expected, found) — "
-        f"re-adjudicate each site and update the count: {drift}"
-    )
+    check(WINDOW, "drifted")
 
 
 def test_allowlist_has_no_stale_entries():
-    found = _scan()
-    stale = [k for k in _ALLOWLIST if k not in found]
-    assert not stale, (
-        "allowlist entries matching no current source line (site removed "
-        f"or edited — re-classify the new form): {stale}"
-    )
+    check(WINDOW, "stale")
 
 
-def test_global_windows_only_carry_global_safe_categories():
-    """A window with NO partition key serializes the whole input through
-    one task; it is only acceptable over a provably tiny relation
-    (reduced-input) or as a deliberate layout comparator.  Classifying a
-    global form as high-cardinality-key would be self-contradictory."""
-    for (fname, line), (cat, _n) in _ALLOWLIST.items():
-        if _GLOBAL_PAT.search(line):
-            assert cat in _GLOBAL_OK, (
-                f"{fname}: global window form {line!r} classified "
-                f"{cat!r}; global forms must be one of {sorted(_GLOBAL_OK)}"
-            )
+def test_every_category_is_documented_in_plans_md():
+    check(WINDOW, "undocumented")
 
 
 def test_audited_categories_still_present():
-    """Each category is load-bearing in the table above; if a refactor
-    drops the last member the docstring taxonomy needs a rewrite, not a
-    silent shrink."""
-    present = {cat for cat, _n in _ALLOWLIST.values()}
-    assert present == _CATEGORIES, (
-        f"category set drifted: missing {_CATEGORIES - present}, "
-        f"unknown {present - _CATEGORIES}"
-    )
+    check(WINDOW, "unused")
+
+
+def test_global_windows_only_carry_global_safe_categories():
+    bad = misclassified_global_windows(WINDOW.ledger)
+    assert not bad, f"global window forms in a non-global category: {bad}"
+
+
+def test_global_window_check_rejects_a_keyed_category():
+    seeded = {
+        ("a.py", "w = Window.orderBy(ts)"): ("high-cardinality-key", 1),
+        ("a.py", "w = Window.partitionBy()"): ("bounded-vocab-audited", 1),
+        ("a.py", "w = Window.orderBy(day)"): ("reduced-input", 1),
+        ("a.py", 'w = Window.partitionBy("user_id")'): ("high-cardinality-key", 1),
+    }
+    assert [key for key, _cat in misclassified_global_windows(seeded)] == [
+        ("a.py", "w = Window.orderBy(ts)"),
+        ("a.py", "w = Window.partitionBy()"),
+    ]
