@@ -65,6 +65,17 @@ def _oracle_timings(sf_dir: str, specs) -> dict[str, float]:
     return out
 
 
+def _codegen_compiles(spark) -> int | None:
+    """Generated classes Janino has compiled in this JVM so far: each
+    codegen-cache miss compiles once (``CodegenMetrics``).  None under
+    Spark Connect, which has no co-located JVM."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([\d.]+)", sf_dir)
@@ -93,7 +104,10 @@ def main() -> None:
 
     # Warmup: one untimed pass compiles each plan's whole-stage codegen and
     # primes file listings, so the timed pass measures steady-state engine
-    # throughput rather than one-time JVM compilation.
+    # throughput rather than one-time JVM compilation.  That holds while
+    # the codegen cache holds a whole pass (session.get_spark sizes it);
+    # ``codegen_compiles`` in the detail shows whether it did.
+    compiles0 = _codegen_compiles(spark)
     load(spark, sf_dir, "lineitem").count()
     specs = sorted(all_specs().items())
     for _, spec in specs:
@@ -121,11 +135,13 @@ def main() -> None:
             pass  # gateway already torn down
         _t.sleep(2)
 
+    compiles1 = _codegen_compiles(spark)
     timings: dict[str, float] = {}
     for name, spec in specs:
         t0 = time.perf_counter()
         run(spec)
         timings[name] = round(time.perf_counter() - t0, 4)
+    compiles2 = _codegen_compiles(spark)
 
     oracle = {}
     if os.environ.get("SPARK_GRAFT_BENCH_ORACLE", "1") != "0":
@@ -147,7 +163,10 @@ def main() -> None:
         "sf": sf,
         "detail": "BENCH_DETAIL.json",
     }
-    detail = dict(protocol, queries=timings, oracle=oracle)
+    codegen = None
+    if compiles0 is not None:
+        codegen = {"warmup": compiles1 - compiles0, "timed": compiles2 - compiles1}
+    detail = dict(protocol, queries=timings, oracle=oracle, codegen_compiles=codegen)
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )

@@ -21,6 +21,7 @@ list path uses, never to different values.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -36,3 +37,15 @@ def local_df(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame
     cols = [f.name for f in schema.fields]
     pdf = pd.DataFrame.from_records(list(rows), columns=cols)
     return spark.createDataFrame(pdf, schema)
+
+
+def empty_df(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A relation with no rows and ``schema``'s columns (all nullable),
+    planned in the JVM: typed nulls over ``spark.range(0)``.
+    ``spark.createDataFrame([], schema)`` takes the pickled path, and every
+    action on it starts a Python worker for zero rows."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )

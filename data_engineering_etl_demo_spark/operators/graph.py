@@ -433,9 +433,9 @@ def pagerank(pairs: DataFrame, iters: int = 2) -> DataFrame:
     n_nodes = deg.count()
     if n_nodes == 0:
         # empty graph: no vertices, no ranks — keep the declared schema
-        return edges.sparkSession.createDataFrame(
-            [], "doc_id long, rank_fp long"
-        )
+        from data_engineering_etl_demo_spark.functions.local_rows import empty_df
+
+        return empty_df(edges.sparkSession, "doc_id long, rank_fp long")
     r0 = PR_SCALE // n_nodes
     teleport = (PR_SCALE * 15 // 100) // n_nodes
     ranks = deg.select(

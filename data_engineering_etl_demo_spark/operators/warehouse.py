@@ -42,15 +42,34 @@ FACTS = ("fact_events", "fact_international_sales")
 # fact_international_sales required input contract (pipeline/load.py:150-153)
 INTL_REQUIRED = ("sale_id", "ts", "date_key", "customer", "sku", "gross_amt")
 
+# Each table's columns as the upserts write them, partition column last as
+# a parquet read lists it.  Reading with them plans a scan without the
+# footer-reading schema-inference job a bare read runs on every call, and
+# keeps the partition columns (event_date/date_key) the TEXT they were
+# written as — the reference DDL cited above stores dates as strings —
+# without turning partition type inference off for the whole session.
+SCHEMAS = {
+    "dim_users": "user_id string, country string, signup_source string",
+    "dim_event_types": "event string, event_type_id bigint",
+    "dim_dates": "date_key string, year int, month int, day int",
+    "dim_customers": "customer_name string, customer_id bigint",
+    "dim_products": "sku string, product_id bigint",
+    "fact_events": (
+        "event_id string, ts timestamp, user_id string, event_type_id bigint, "
+        "amount double, page string, event_hour int, event_date string"
+    ),
+    "fact_international_sales": (
+        "sale_id string, ts string, customer_id bigint, product_id bigint, "
+        "pcs bigint, rate double, gross_amt double, currency string, "
+        "source_dataset string, date_key string"
+    ),
+}
+
 
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = str(root)
-        # keep partition columns (event_date/date_key) as the TEXT they were
-        # written as — the reference warehouse stores dates as strings
-        # (/root/reference/sql/warehouse_star.sql:34,42,46)
-        spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
 
     # -- storage helpers ----------------------------------------------------
 
@@ -61,8 +80,16 @@ class Warehouse:
         p = Path(self._path(name))
         return p.exists() and any(p.iterdir())
 
+    def _read(self, name: str, path: str) -> DataFrame:
+        """Parquet read with the declared schema of a star table; any
+        other table (a caller's own, e.g. a snapshot demo's) is inferred."""
+        reader = self.spark.read
+        if name in SCHEMAS:
+            reader = reader.schema(SCHEMAS[name])
+        return reader.parquet(path)
+
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        return self._read(name, self._path(name))
 
     def _swap_write(self, name: str, df: DataFrame, partition_by: str | None = None):
         """Materialize → atomic dir swap.  Parquet-safe self-merge."""
@@ -167,22 +194,23 @@ class Warehouse:
         duplicate survives there.  Locating old keys is a key+partition
         column scan semi-joined to the batch keys — the two-column,
         column-pruned analogue of Delta MERGE's touched-file join; the
-        REWRITE still only covers the touched partitions."""
-        vals = {
-            r[0]
-            for r in updates.select(partition_by).distinct().collect()
-        }
-        if not vals:
-            return
-        vals |= {
-            r[0]
-            for r in self.table(name)
+        REWRITE still only covers the touched partitions.  One query finds
+        both sets; an empty batch touches nothing on either side."""
+        old_parts = (
+            self.table(name)
             .select(key, partition_by)
             .join(updates.select(key).distinct(), on=key, how="leftsemi")
             .select(partition_by)
+        )
+        vals = {
+            r[0]
+            for r in updates.select(partition_by)
+            .union(old_parts)
             .distinct()
             .collect()
         }
+        if not vals:
+            return
         non_null = [v for v in vals if v is not None]
         cond = F.col(partition_by).isin(non_null)
         if len(non_null) < len(vals):
@@ -556,7 +584,7 @@ class Warehouse:
         p = os.path.join(self._snap_dir(name), f"v{version}")
         if not os.path.isdir(p):
             raise FileNotFoundError(f"{name} has no snapshot v{version}")
-        return self.spark.read.parquet(p)
+        return self._read(name, p)
 
     @staticmethod
     def snapshot_diff(

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_engineering_etl_demo_spark.functions.local_rows import empty_df
 from data_engineering_etl_demo_spark.operators.warehouse import Warehouse
 from data_engineering_etl_demo_spark.sources.ingest import write_csv_export
 
@@ -94,9 +95,7 @@ def run_all(
     for name, sql in QUERIES.items():
         if name == "international_revenue" and not wh.exists("fact_international_sales"):
             # graceful empty (reference swallows the missing table)
-            df = spark.createDataFrame(
-                [], "event_date string, intl_revenue double"
-            )
+            df = empty_df(spark, "event_date string, intl_revenue double")
         else:
             df = spark.sql(sql)
         csv_path = None

@@ -19,7 +19,9 @@ The tagged relation (every parsed line with its `_reason`) feeds the good
 rows, the bad rows and both ingest counts.  `read_events_jsonl` computes
 it once and releases it when the caller's scope closes, so a pipeline that
 runs several actions over it scans its input twice (numbering pre-pass,
-materialization), not once per action.
+materialization), not once per action.  The counts are observed
+(`DataFrame.observe`) by the materialization's own job, so reading them
+costs no further job.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from __future__ import annotations
 from contextlib import ExitStack
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_etl_demo_spark.functions.caching import materialized
@@ -38,18 +40,30 @@ from data_engineering_etl_demo_spark.schemas import RAW_EVENT
 REQUIRED_EVENT_FIELDS = ("event_id", "ts", "event")  # pipeline/ingest.py:12
 
 
+def _count_exprs() -> list:
+    bad = F.col("_reason").isNotNull()
+    return [F.count_if(~bad).alias("good"), F.count_if(bad).alias("bad")]
+
+
 @dataclass
 class IngestResult:
     events: DataFrame  # good rows, ts parsed to TimestampType
     bad_records: DataFrame  # quarantined rows tagged with _reason + _line
     tagged: DataFrame  # every non-blank line, _reason null on good rows
+    observed: Observation  # (good, bad), filled by the materialization
 
     def counts(self) -> tuple[int, int]:
-        """(good, bad) row counts, one aggregate over the tagged lines."""
-        bad = F.col("_reason").isNotNull()
-        r = self.tagged.agg(
-            F.count_if(~bad).alias("good"), F.count_if(bad).alias("bad")
-        ).first()
+        """(good, bad) row counts.  Free when the materialization of the
+        tagged lines filled ``observed``; otherwise (no row, or one the JVM
+        cannot hand back, as the transform's counters can on pipeline
+        re-runs) one aggregate over the tagged lines."""
+        try:
+            if not self.observed._jo.getRowOrEmpty().isEmpty():
+                r = self.observed.get
+                return r["good"], r["bad"]
+        except Exception:
+            pass  # unusable observation: aggregate instead
+        r = self.tagged.agg(*_count_exprs()).first()
         return r["good"], r["bad"]
 
 
@@ -138,7 +152,13 @@ def read_events_jsonl(
         .when(bad_ts, F.lit("invalid_timestamp"))
     )
 
-    tagged = scope.enter_context(materialized(raw.withColumn("_reason", reason)))
+    # the counts ride the materialization's own job (CollectMetrics)
+    observed = Observation()
+    tagged = scope.enter_context(
+        materialized(
+            raw.withColumn("_reason", reason).observe(observed, *_count_exprs())
+        )
+    )
     bad = tagged.filter(F.col("_reason").isNotNull()).select(
         "event_id",
         "ts",
@@ -153,7 +173,7 @@ def read_events_jsonl(
         .withColumn("ts", parsed_ts)
         .drop("_reason", "_corrupt_record", "_line")
     )
-    return IngestResult(events=good, bad_records=bad, tagged=tagged)
+    return IngestResult(events=good, bad_records=bad, tagged=tagged, observed=observed)
 
 
 def read_users_csv(spark: SparkSession, path: str) -> DataFrame:

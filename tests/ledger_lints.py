@@ -612,8 +612,8 @@ _DRIVER_SITES = {
      "queries.select(id_col, vec_col).collect(), key=lambda r: r[id_col]"):
         ("fitted-model-constants", 1),
     ("operators/similarity.py", ".collect()"): ("post-aggregate-bounded", 1),
-    ("operators/warehouse.py", "for r in updates.select(partition_by).distinct().collect()"):
-        ("partition-metadata", 1),
+    # MERGE's touched partitions (batch ∪ old keys, one query) and the
+    # erasure's partitions holding the users
     ("operators/warehouse.py", ".collect()"): ("partition-metadata", 2),
     ("operators/warehouse.py", "base = existing.agg(F.max(id_col)).collect()[0][0] or 0"):
         ("post-aggregate-bounded", 1),

@@ -155,3 +155,26 @@ def test_users_csv_reader(spark, tmp_path):
     rows = {r["user_id"]: r for r in users.collect()}
     assert set(rows) == {"1", "2"}  # trimmed string ids
     assert rows["1"]["country"] == "US"
+
+
+def test_observed_counts_equal_the_aggregate_on_a_dirty_batch_and_a_rerun(
+    spark, events_path
+):
+    """The (good, bad) counts ride the materialization of the tagged lines;
+    on every run, re-runs of the same input included, they must be
+    filled and equal the aggregate over the tagged lines."""
+    from contextlib import ExitStack
+
+    from pyspark.sql import functions as F
+
+    bad = F.col("_reason").isNotNull()
+    for _ in range(2):
+        with ExitStack() as scope:
+            res = read_events_jsonl(spark, events_path, scope)
+            assert not res.observed._jo.getRowOrEmpty().isEmpty()
+            observed = res.observed.get
+            agg = res.tagged.agg(
+                F.count_if(~bad).alias("good"), F.count_if(bad).alias("bad")
+            ).first()
+            assert (observed["good"], observed["bad"]) == (agg["good"], agg["bad"])
+            assert res.counts() == (agg["good"], agg["bad"]) == (1, 3)

@@ -382,3 +382,111 @@ def test_snapshot_missing_table_and_version_raise(spark, tmp_path):
     wh.snapshot_table("t")
     with pytest.raises(FileNotFoundError):
         wh.read_snapshot("t", 7)
+
+
+# ---------------------------------------------------------------------------
+# Declared schemas, session hygiene, compile and job floors
+# ---------------------------------------------------------------------------
+
+_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
+
+
+def _written_schema(spark, path):
+    """The schema a bare parquet read gives with partition values kept as
+    the text they were written as."""
+    saved = spark.conf.get(_INFERENCE)
+    spark.conf.set(_INFERENCE, "false")
+    try:
+        return spark.read.parquet(path).schema
+    finally:
+        spark.conf.set(_INFERENCE, saved)
+
+
+def test_declared_schemas_match_what_the_upserts_write(spark, tmp_path):
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from data_engineering_etl_demo_spark.operators.warehouse import (
+        DIMS,
+        FACTS,
+        SCHEMAS,
+    )
+
+    wh = Warehouse(spark, str(tmp_path))
+    wh.upsert_dim_users(df_users(spark, [("1", "US", "organic")]))
+    wh.upsert_fact_events(df_clean(spark, CLEAN_ROWS))
+    rows = [("s1", "2026-01-01T12:00:00", "2026-01-01", "acme", "SKU1", 2, 5.0, 10.0, "USD", "f.csv")]
+    wh.upsert_fact_international_sales(spark.createDataFrame(rows, INTL_SCHEMA))
+    assert set(SCHEMAS) == set(DIMS + FACTS)
+    for name in DIMS + FACTS:
+        written = _written_schema(spark, os.path.join(str(tmp_path), name))
+        assert StructType.fromDDL(SCHEMAS[name]) == written, name
+        assert wh.table(name).schema == written, name
+
+
+def test_warehouse_leaves_session_conf_unchanged_and_keeps_partition_text(
+    spark, tmp_path
+):
+    """Constructing a Warehouse changes no session conf; its declared
+    schemas keep a partition value the text it was written as, where
+    partition type inference would read '0007' as the integer 7."""
+    before = dict(spark.conf.getAll)
+    wh = Warehouse(spark, str(tmp_path))
+    assert dict(spark.conf.getAll) == before
+    assert spark.conf.get(_INFERENCE) == "true"
+    wh.upsert_fact_events(
+        df_clean(spark, [("e1", None, "1", "signup", None, None, "0007", 0)])
+    )
+    assert [r["event_date"] for r in wh.table("fact_events").collect()] == ["0007"]
+    inferred = spark.read.parquet(str(tmp_path / "fact_events"))
+    assert [r["event_date"] for r in inferred.collect()] == [7]
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_empty_relations_start_no_python_worker(spark, tmp_path):
+    """EP2's header-only export of a missing intl fact is planned in the
+    JVM: a pickled empty createDataFrame starts a Python worker."""
+    from data_engineering_etl_demo_spark.functions.local_rows import empty_df
+    from data_engineering_etl_demo_spark.plans.warehouse_analytics import run_all
+
+    ddl = "event_date string, intl_revenue double"
+    assert "PythonRDD" in _lineage(spark.createDataFrame([], ddl))
+    empty = empty_df(spark, ddl)
+    assert "PythonRDD" not in _lineage(empty)
+    assert empty.schema == spark.createDataFrame([], ddl).schema
+    assert empty.count() == 0
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.upsert_fact_events(df_clean(spark, CLEAN_ROWS))
+    out = run_all(spark, wh, export_dir=str(tmp_path / "exports"))
+    intl = out["international_revenue"]
+    assert "PythonRDD" not in _lineage(intl.df)
+    (csv,) = (tmp_path / "exports" / "international_revenue").glob("*.csv")
+    assert csv.read_text() == "event_date,intl_revenue\n"
+
+
+def _compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_a_repeated_pipeline_run_compiles_almost_nothing(spark, tmp_path):
+    """The codegen cache holds a whole EP1 run: the same input loaded into
+    a second fresh warehouse reuses the first run's generated classes.
+    Spark's default LRU of 100 classes is smaller than one run, so there
+    every run recompiled about as many classes as the first."""
+    from data_engineering_etl_demo_spark.etl import run_pipeline
+
+    events, users = _ep1_inputs(tmp_path)
+    compiled = []
+    for i in range(2):
+        c0 = _compiles(spark)
+        run_pipeline(spark, str(events), str(users),
+                     warehouse_dir=str(tmp_path / f"wh{i}"),
+                     output_dir=str(tmp_path / f"out{i}"))
+        compiled.append(_compiles(spark) - c0)
+    assert compiled[1] <= 0.05 * compiled[0], compiled
